@@ -34,7 +34,8 @@ pure Python because those jars aren't in this image. Properties:
   unchanged inside a transaction.
 - once a table has a commit-log entry it is TRACKED: reads resolve
   through the log only (by-name file listing with ``basePath`` so hive
-  partition columns still parse and prune). The first transactional
+  partition columns still parse and prune), under the schema the log
+  records, so planning a read runs no Spark job. The first transactional
   append to a pre-existing legacy table adopts its current files into
   the entry, so history stays visible.
 - single writer per warehouse root (the reference's posture — one daily
@@ -54,6 +55,7 @@ import base64
 import contextlib
 import datetime
 import errno
+import functools
 import json
 import os
 import re
@@ -191,6 +193,13 @@ class Transaction:
         # metadata channel like ``constraints``: applied in log order,
         # survives replaces, read back by ``_declared_schema``
         self.schema_updates: dict[str, str] = {}
+        # table -> canonical schema JSONs of the data files THIS txn
+        # staged (first appearance order): the source of the entry's
+        # ``file_schema`` channel (see ``_file_schema_entry``)
+        self._own_schemas: dict[str, list[str]] = {}
+        # table -> the FULL ``file_schema`` list to record, set by
+        # callers that relink another snapshot's files (clone, restore)
+        self.file_schemas: dict[str, list[str]] = {}
         # table -> bloom-filter config (``set_bloom_filter``) — same
         # metadata contract as constraints/schema
         self.bloom_cols: dict[str, dict] = {}
@@ -386,7 +395,10 @@ class Transaction:
             # first transactional write to a legacy table: adopt its
             # current files so they stay visible once the table flips to
             # commit-log reads
-            files.extend(_data_files(table_dir))
+            adopted = _data_files(table_dir)
+            files.extend(adopted)
+            for sj in self.wh._footer_schemas(table, adopted):
+                self._note_schema(table, sj)
         k = 0
         new_rels: list[str] = []
         for dirpath, dirnames, fnames in os.walk(stage):
@@ -408,9 +420,61 @@ class Transaction:
                 if st:
                     self.stats.setdefault(table, {})[rel] = st
         shutil.rmtree(stage, ignore_errors=True)
-        self._record_blooms(table, new_rels)
+        if new_rels:
+            # one write = one data schema: the first file's footer
+            # speaks for every file this append staged
+            sj = _footer_schema_json(os.path.join(table_dir, new_rels[0]))
+            self._note_schema(table, sj)
+            self._record_blooms(table, new_rels, _merged_schema((sj,)))
 
-    def _record_blooms(self, table: str, new_rels: list[str]) -> None:
+    def _note_schema(self, table: str, sj: str) -> None:
+        own = self._own_schemas.setdefault(table, [])
+        if sj not in own:
+            own.append(sj)
+
+    def _file_schema_entry(self) -> dict[str, list[str]]:
+        """The commit entry's ``file_schema`` channel: per table, the
+        schemas of its data files, so reads plan against the log and
+        never open a footer. An ADD entry (or a replace's append-only
+        table) carries only schemas the table has not recorded yet, so
+        a steady-state commit carries none; replay unions them in. A
+        REPLACE carries the table's full list when it changes it: a
+        rewrite of every file resets the list to what it wrote. Files
+        the log tracks without a recorded schema (adopted legacy files,
+        logs older than this channel) are read from their footers
+        once, here, and recorded with the rest."""
+        state = self.wh._replay_state()
+        mine = f"txn-{self.txnid}-"
+        out: dict[str, list[str]] = {}
+        for t, files in self.pending.items():
+            if t in self.file_schemas:
+                out[t] = list(self.file_schemas[t])
+                continue
+            rec = state["file_schema"].get(t)
+            if rec is None:
+                rec_base = self.wh._footer_schemas(t, list(dict.fromkeys(
+                    list(state["tables"].get(t, [])) + [
+                        r for r in files
+                        if not os.path.basename(r).startswith(mine)])))
+            else:
+                rec_base = list(rec)
+            own = self._own_schemas.get(t, [])
+            if self.replace and t not in self.append_only:
+                rewrote_all = all(os.path.basename(r).startswith(mine)
+                                  for r in files)
+                full = list(dict.fromkeys(
+                    ([] if rewrote_all else rec_base) + own))
+                if full != rec:
+                    out[t] = full
+            else:
+                new = [s for s in dict.fromkeys(rec_base + own)
+                       if s not in (rec or [])]
+                if new:
+                    out[t] = new
+        return out
+
+    def _record_blooms(self, table: str, new_rels: list[str],
+                       schema: T.StructType) -> None:
         """Per-file Bloom bitsets for the table's configured bloom
         columns (the Delta bloom-filter-index analog), computed in ONE
         column-pruned Spark job over the files THIS append staged and
@@ -429,7 +493,7 @@ class Transaction:
         if not cfg or not new_rels:
             return
         try:
-            self._record_blooms_inner(table, new_rels, cfg)
+            self._record_blooms_inner(table, new_rels, cfg, schema)
         except Exception as e:  # noqa: BLE001
             # blooms are an OPTIMIZATION, never a correctness
             # dependency (missing bitset = file always kept): a failed
@@ -444,12 +508,12 @@ class Transaction:
             )
 
     def _record_blooms_inner(self, table: str, new_rels: list[str],
-                             cfg: dict) -> None:
+                             cfg: dict, schema: T.StructType) -> None:
         m, kk = int(cfg["m"]), int(cfg["k"])
         types = cfg.get("types", {})
         ts_micros = cfg.get("ts") == "micros"
         p = self.wh._path(table)
-        src = self.wh.spark.read.parquet(
+        src = self.wh.spark.read.schema(schema).parquet(
             *[os.path.join(p, r) for r in new_rels])
         frames = []
         for c in cfg["cols"]:
@@ -522,6 +586,9 @@ class Transaction:
                 entry["constraints"] = self.constraints
             if self.schema_updates:
                 entry["schema"] = self.schema_updates
+            file_schema = self._file_schema_entry()
+            if file_schema:
+                entry["file_schema"] = file_schema
             if self.bloom_cols:
                 entry["bloom_cols"] = self.bloom_cols
             if self.drop_tables:
@@ -662,6 +729,13 @@ class Transaction:
                     if entry is not None and news:
                         entry.setdefault("absorbed", {}).setdefault(
                             t, []).extend(news)
+                        # a replace that RESETS the table's schema list
+                        # must still cover the carried files' schemas
+                        full = entry.get("file_schema", {}).get(t)
+                        if full is not None:
+                            full.extend(
+                                sj for sj in self.wh._footer_schemas(t, news)
+                                if sj not in full)
                     absorbed_now = True
         if absorbed_now and entry is not None:
             # the tmp file is not linked yet — re-serialize it with the
@@ -1063,6 +1137,86 @@ def _data_files(table_dir: str) -> list[str]:
                 rel_dir = os.path.relpath(dirpath, table_dir)
                 out.append(os.path.join(rel_dir, fn) if rel_dir != "." else fn)
     return out
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every level nullable — what Spark resolves a parquet
+    scan's data schema to, whatever nullability the writer recorded."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _footer_schema_json(path: str) -> str:
+    """The Spark schema of one parquet data file, as canonical JSON, read
+    from its footer on the driver (pyarrow; no Spark job). Spark-written
+    files carry their exact Spark schema in the footer's row metadata;
+    other writers (the native stream sink's Arrow batches) convert from
+    the Arrow schema the way the stream source resolves it."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(path).metadata or {}
+    raw = meta.get(_SPARK_ROW_METADATA)
+    if raw:
+        schema = T.StructType.fromJson(json.loads(raw))
+    else:
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        schema = from_arrow_schema(pq.read_schema(path),
+                                   prefer_timestamp_ntz=True)
+    return _nullable(schema).json()
+
+
+def _merge_types(a: T.DataType, b: T.DataType) -> T.DataType:
+    """Spark's ``mergeSchema`` footer merge on the driver: structs union
+    their fields by case-insensitive name (left order, then right's new
+    fields), arrays and maps merge element-wise, and any other type
+    pair must be equal."""
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        right = {f.name.lower(): f for f in b.fields}
+        fields = []
+        for f in a.fields:
+            g = right.pop(f.name.lower(), None)
+            fields.append(f if g is None else T.StructField(
+                f.name, _merge_types(f.dataType, g.dataType), True,
+                {**g.metadata, **f.metadata}))
+        return T.StructType(fields + [g for g in b.fields
+                                      if g.name.lower() in right])
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return T.ArrayType(_merge_types(a.elementType, b.elementType), True)
+    if isinstance(a, T.MapType) and isinstance(b, T.MapType):
+        return T.MapType(_merge_types(a.keyType, b.keyType),
+                         _merge_types(a.valueType, b.valueType), True)
+    if a == b:
+        return a
+    raise ValueError(f"cannot merge incompatible types {a.simpleString()} "
+                     f"and {b.simpleString()}")
+
+
+@functools.lru_cache(maxsize=64)
+def _merged_schema(sjs: tuple[str, ...]) -> T.StructType:
+    """The schema JSONs ``sjs`` parsed and merged in order. Cached and
+    shared between callers: never mutate the result."""
+    return functools.reduce(
+        _merge_types, [T.StructType.fromJson(json.loads(sj)) for sj in sjs])
+
+
+def _physical(schema: T.StructType, phys: dict) -> T.StructType:
+    """``schema`` with column-mapped fields renamed to the PHYSICAL
+    parquet names their bytes live under."""
+    return T.StructType([
+        T.StructField(phys.get(f.name.lower(), f.name), f.dataType,
+                      f.nullable, f.metadata)
+        for f in schema.fields])
 
 
 def _partition_pairs_of(rel: str) -> list[tuple[str, str]]:
@@ -1506,6 +1660,14 @@ class Warehouse:
         # contract — log order, replace-proof
         for table, sj in entry.get("schema", {}).items():
             state["schema"][table] = sj
+        # data-file schemas (``Transaction._file_schema_entry``): a
+        # replaced table's list is whole-value, anything else unions in
+        for table, sjs in entry.get("file_schema", {}).items():
+            if entry.get("op") == "replace" and table not in appends:
+                state["file_schema"][table] = list(sjs)
+            else:
+                cur = state["file_schema"].setdefault(table, [])
+                cur.extend(sj for sj in sjs if sj not in cur)
         for table, cfg in entry.get("bloom_cols", {}).items():
             state["bloom_cols"][table] = cfg
         # DROP TABLE: the table leaves every catalog channel; its
@@ -1514,7 +1676,7 @@ class Warehouse:
         for table in entry.get("drop_tables", []):
             for key in ("tables", "stats", "partition_by", "dv",
                         "dv_rows", "constraints", "schema",
-                        "bloom_cols"):
+                        "file_schema", "bloom_cols"):
                 state[key].pop(table, None)
             state["retention"][table] = seq
 
@@ -1549,7 +1711,8 @@ class Warehouse:
             state: dict = {"tables": {}, "stats": {}, "retention": {},
                            "partition_by": {}, "dv": {}, "dv_rows": {},
                            "constraints": {}, "schema": {},
-                           "bloom_cols": {}, "stats_ckpt": None}
+                           "file_schema": {}, "bloom_cols": {},
+                           "stats_ckpt": None}
             start = 0
             skipped = 0  # newest checkpoint seq passed over as unusable
             for cseq in reversed(ckpt_seqs):
@@ -1585,6 +1748,8 @@ class Warehouse:
                     "constraints": {t: dict(v) for t, v in
                                     ck.get("constraints", {}).items()},
                     "schema": dict(ck.get("schema", {})),
+                    "file_schema": {t: list(v) for t, v in
+                                    ck.get("file_schema", {}).items()},
                     "bloom_cols": dict(ck.get("bloom_cols", {})),
                     "stats_ckpt": spath,
                 }
@@ -1730,7 +1895,7 @@ class Warehouse:
         os.replace(stmp, self._ckpt_stats_path(seq))
         ck = {"seq": seq, "stats_file": True,
               **{k: v for k, v in state.items()
-                 if k not in ("stats", "stats_ckpt")}}
+                 if k not in ("stats", "stats_ckpt", "inferred_schema")}}
         tmp = os.path.join(d, f".ckpt-tmp-{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as f:
             json.dump(ck, f)
@@ -2136,14 +2301,16 @@ class Warehouse:
         if not covering:
             return lhs if keep_file_col else df
         p = self._path(table)
-        # mergeSchema: dv files written before and after an additive
-        # schema change carry different footers; without the merge,
-        # Spark infers from an arbitrary file and a narrower winner
-        # would silently shrink the shared-column match set below
-        # (over-deleting rows that differ only in the newer column)
-        dv_raw = self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(p, r) for r in covering]
-        )
+        # merged footers: dv files written before and after an additive
+        # schema change carry different schemas; one arbitrary footer
+        # could be the narrower one and silently shrink the shared-
+        # column match set below (over-deleting rows that differ only
+        # in the newer column). Sidecars are few and tiny: their
+        # footers merge on the driver, with no Spark job (a missing
+        # sidecar raises FileNotFoundError naming it).
+        dv_raw = self.spark.read.schema(_merged_schema(tuple(dict.fromkeys(
+            _footer_schema_json(os.path.join(p, r)) for r in covering)))
+        ).parquet(*[os.path.join(p, r) for r in covering])
         # additive schema evolution after the delete: a column the dv
         # rows predate is NULL in every file they cover (old files), so
         # matching on the SHARED columns still identifies exactly the
@@ -2383,20 +2550,78 @@ class Warehouse:
         the parquet footers say, exactly as before."""
         return self._schema_meta(table, at=at)[0]
 
+    def _footer_schemas(self, table: str, rels: list[str]) -> list[str]:
+        """Distinct canonical schemas of ``rels``' parquet footers, in
+        path order — driver-side footer reads for files the log tracks
+        without a recorded schema (adopted legacy files, logs older than
+        the ``file_schema`` channel, carried files of a schema-resetting
+        replace). A file missing from disk contributes nothing: its
+        scan fails on its own, and a commit must not."""
+        p = self._path(table)
+        out: list[str] = []
+        for r in sorted(rels):
+            try:
+                sj = _footer_schema_json(os.path.join(p, r))
+            except FileNotFoundError:
+                continue
+            if sj not in out:
+                out.append(sj)
+        return out
+
+    def _recorded_file_schemas(self, table: str,
+                               at: int | None = None) -> list[str]:
+        """The table's data-file schemas from the log as of ``at``, plus
+        (at head) what the open transaction staged. A table whose log
+        predates the channel is read from its footers once per replayed
+        state."""
+        t = table.lower()
+        state = self._replay_state(at)
+        sjs = state["file_schema"].get(t)
+        if sjs is None:
+            memo = state.setdefault("inferred_schema", {})
+            if t not in memo:
+                memo[t] = self._footer_schemas(
+                    t, state["tables"].get(t) or [])
+            sjs = memo[t]
+        txn = self._active_txn
+        if at is None and txn is not None and not txn._done:
+            sjs = list(dict.fromkeys(
+                list(sjs) + txn._own_schemas.get(t, [])))
+        return sjs
+
+    def _read_schema(self, table: str, at: int | None = None
+                     ) -> tuple[T.StructType, dict, bool]:
+        """``(schema, phys, declared)`` a tracked read plans against —
+        no Spark job. A DECLARED schema wins. Otherwise the data-file
+        schemas the log recorded are merged on the driver the way
+        ``mergeSchema`` merges footers: one schema for a table that
+        never changed shape, the union (later columns NULL in older
+        files) for one that evolved additively. Recorded types that
+        cannot be merged raise ``ValueError``: no single schema reads
+        every file of the table."""
+        decl, phys, _ = self._schema_meta(table, at=at)
+        if decl is not None:
+            return decl, phys, True
+        sjs = tuple(self._recorded_file_schemas(table, at))
+        if not sjs:
+            raise FileNotFoundError(
+                f"table {table} has no data files and no declared schema")
+        return _merged_schema(sjs), {}, False
+
     def _tracked_read(self, table: str, rels: list[str],
-                      at: int | None = None,
-                      merge_schema: bool = False) -> DataFrame:
+                      at: int | None = None) -> DataFrame:
         """``spark.read`` over committed relpaths with ``basePath``
-        hive-partition recovery. When the table has a DECLARED schema
-        (``add_columns``), the scan resolves against IT: parquet
-        by-name resolution fills files that predate an added column
-        with typed NULLs, and NO footer-merge job runs — the Delta
-        read-the-schema-from-the-log contract, which also keeps every
-        maintenance rewrite (compact / cluster / DML) from silently
-        dropping a column only the newest files carry. Columns with a
-        physical-name mapping (RENAME / re-add after DROP) scan under
-        their PHYSICAL name and alias back to the logical one — one
-        projection, no data movement.
+        hive-partition recovery, always under an explicit schema from
+        the log (``_read_schema``), so planning opens no footer and runs
+        no Spark job — the Delta read-the-schema-from-the-log contract.
+        Parquet by-name resolution fills files that lack a column with
+        typed NULLs, which also keeps every maintenance rewrite (compact
+        / cluster / DML) from dropping a column only some files carry.
+        An undeclared table's hive path keys follow its file columns, as
+        partition discovery types them. A declared table projects to its
+        declared columns; column-mapped ones (RENAME / re-add after
+        DROP) scan under their PHYSICAL name and alias back to the
+        logical one — one projection, no data movement.
 
         MIXED layouts (after ``set_partition_spec``: some files flat,
         some hive-partitioned, or partitioned by different keys) are
@@ -2405,89 +2630,51 @@ class Warehouse:
         discovery silently DROP the rows of files outside the
         discovered layout."""
         p = self._path(table)
-        reader = self.spark.read
-        decl, phys, _ = self._schema_meta(table, at=at)
+        schema, phys, declared = self._read_schema(table, at)
         layouts: dict[frozenset, list[str]] = {}
         for r in rels:
             layouts.setdefault(
                 frozenset(k for k, _ in _partition_pairs_of(r)), []
             ).append(r)
         if len(layouts) > 1:
-            return self._mixed_layout_read(
-                table, p, layouts, decl, phys, merge_schema)
-        if decl is not None:
-            if phys:
-                physical = T.StructType([
-                    T.StructField(phys.get(f.name.lower(), f.name),
-                                  f.dataType, f.nullable)
-                    for f in decl.fields])
-                df = reader.schema(physical).option(
-                    "basePath", p).parquet(
-                        *[os.path.join(p, r) for r in rels])
-                return df.select(*[
-                    F.col(phys.get(f.name.lower(), f.name)).alias(f.name)
-                    for f in decl.fields])
-            # project to the DECLARED column order: Spark appends hive
-            # partition columns after the data columns even under an
-            # explicit schema
-            return reader.schema(decl).option("basePath", p).parquet(
-                *[os.path.join(p, r) for r in rels]
-            ).select(*[f.name for f in decl.fields])
-        elif merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        return reader.option("basePath", p).parquet(
-            *[os.path.join(p, r) for r in rels])
+            return self._mixed_layout_read(p, layouts, schema, phys,
+                                           declared)
+        df = self.spark.read.schema(_physical(schema, phys)).option(
+            "basePath", p).parquet(*[os.path.join(p, r) for r in rels])
+        if not declared:
+            return df
+        # declared column order: Spark appends hive partition columns
+        # after the data columns even under an explicit schema
+        return df.select(*[
+            F.col(phys.get(f.name.lower(), f.name)).alias(f.name)
+            for f in schema.fields])
 
-    def _mixed_layout_read(self, table: str, p: str, layouts: dict,
-                           decl, phys: dict,
-                           merge_schema: bool) -> DataFrame:
+    def _mixed_layout_read(self, p: str, layouts: dict,
+                           schema: T.StructType, phys: dict,
+                           declared: bool) -> DataFrame:
         """One frame per partition-layout group, unioned by name: each
         group's leaf files read directly (NO basePath, so no partition
-        discovery can misattribute rows), with that group's hive
-        partition values lifted back to columns by parsing
-        ``input_file_name()`` — constant per file, no data movement.
-        Path values are hive-unescaped, the NULL sentinel honored, and
-        cast to the DECLARED type when the table has one (``
-        set_partition_spec`` declares the schema for exactly this
-        reason); files missing a column of another layout surface it
+        discovery can misattribute rows) under ``schema`` minus the
+        group's path keys, with the keys lifted back to columns by
+        parsing ``input_file_name()`` — constant per file, no data
+        movement. Path values are hive-unescaped, the NULL sentinel
+        honored, and cast to the column's type in ``schema`` (declared,
+        or the in-file type a flat group records) so ``unionByName``
+        never coerces a column to string; a key no schema knows stays
+        a string. Files missing a column of another layout surface it
         as NULL via ``allowMissingColumns``."""
-        decl_types = {f.name.lower(): f.dataType
-                      for f in (decl.fields if decl is not None else [])}
-        raw_frames = []
-        native_types: dict[str, T.DataType] = {}
+        types = {f.name.lower(): f.dataType for f in schema.fields}
+        frames = []
         for keys, group in sorted(layouts.items(),
                                   key=lambda kv: sorted(kv[0])):
             kl = {k.lower() for k in keys}
-            reader = self.spark.read
-            if decl is not None:
-                in_file = [f for f in decl.fields
-                           if f.name.lower() not in kl]
-                physical = T.StructType([
-                    T.StructField(phys.get(f.name.lower(), f.name),
-                                  f.dataType, f.nullable)
-                    for f in in_file])
-                df = reader.schema(physical).parquet(
+            in_file = [f for f in schema.fields if f.name.lower() not in kl]
+            df = self.spark.read.schema(
+                _physical(T.StructType(in_file), phys)).parquet(
                     *[os.path.join(p, r) for r in group])
-                df = df.select(*[
-                    F.col(phys.get(f.name.lower(), f.name)).alias(f.name)
-                    for f in in_file])
-            else:
-                if merge_schema:
-                    reader = reader.option("mergeSchema", "true")
-                df = reader.parquet(
-                    *[os.path.join(p, r) for r in group])
-                # remember each column's NATIVE (in-file) type so a
-                # layout group that only carries it as a path value can
-                # lift it at the same type — otherwise unionByName would
-                # silently coerce the whole column to string against the
-                # flat group's e.g. int (advisor r12)
-                for f in df.schema.fields:
-                    nt = native_types.get(f.name.lower())
-                    if nt is None or isinstance(nt, T.StringType):
-                        native_types[f.name.lower()] = f.dataType
-            raw_frames.append((keys, df))
-        frames = []
-        for keys, df in raw_frames:
+            df = df.select(*[
+                F.col(phys.get(f.name.lower(), f.name)).alias(f.name)
+                for f in in_file])
             for k in sorted(keys):
                 # greedy ".*/" anchors the capture to the LAST
                 # "k=value/" path segment — the file's OWN partition
@@ -2514,8 +2701,7 @@ class Warehouse:
                 val = F.when(
                     raw == "__HIVE_DEFAULT_PARTITION__", F.lit(None)
                 ).otherwise(F.coalesce(dec, _dec(raw), raw))
-                want = decl_types.get(k.lower(),
-                                      native_types.get(k.lower()))
+                want = types.get(k.lower())
                 if want is not None and not isinstance(want,
                                                        T.StringType):
                     val = val.cast(want)
@@ -2524,11 +2710,11 @@ class Warehouse:
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr, allowMissingColumns=True)
-        if decl is not None:
+        if declared:
             # declared column order, same contract as the single-layout
             # declared read (undeclared layout keys are dropped there
             # too by the decl-order projection)
-            out = out.select(*[f.name for f in decl.fields])
+            out = out.select(*[f.name for f in schema.fields])
         return out
 
     def add_columns(self, table: str, cols: dict[str, str]) -> None:
@@ -3493,6 +3679,9 @@ class Warehouse:
             sj = state["schema"].get(src)
             if sj:
                 txn.schema_updates = {dst: sj}
+            fs = state["file_schema"].get(src)
+            if fs is not None:
+                txn.file_schemas[dst] = list(fs)
             bc = state["bloom_cols"].get(src)
             if bc:
                 txn.bloom_cols = {dst: dict(bc)}
@@ -3675,14 +3864,15 @@ class Warehouse:
         that the writer added for pruning are physical layout, not part
         of the logical table.
 
-        ``merge_schema=True`` is the schema-EVOLUTION read: parquet
-        footers across the whole file set are unioned (Spark
-        ``mergeSchema``), so a column added by a later append is visible
-        over the full history, with nulls for pre-evolution files —
-        additive evolution only, same contract as Delta's
-        mergeSchema writes. Off by default: footer merging reads every
-        footer, which costs listing time at 100 TB, and stable-schema
-        tables don't need it."""
+        A commit-log tracked table plans against the schema the log
+        holds — declared, or the data-file schemas its commits recorded
+        — so building the frame opens no footer and runs no Spark job.
+        A table whose appends added columns reads as the union, older
+        files NULL in the newer columns (Delta's additive evolution).
+        Recorded types that cannot merge raise, as Spark's
+        ``mergeSchema`` does. ``merge_schema=True`` matters only on an
+        untracked legacy table, where it is Spark's footer
+        ``mergeSchema``."""
         return self._read_impl(table, schema, merge_schema, prune)
 
     def _read_impl(self, table, schema, merge_schema, prune) -> DataFrame:
@@ -3702,6 +3892,7 @@ class Warehouse:
         versions = _versions(p)
         mf = self._manifest_files(table)
         pend = self._pending_files(table)
+        # untracked layouts only: tracked reads plan from the log
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
@@ -3727,19 +3918,14 @@ class Warehouse:
                 ]
                 if not rels:
                     # every file skipped: empty frame with the table's
-                    # schema. Schema-only read over the FULL file set
-                    # through the configured reader (footers only, no
-                    # data) so a mergeSchema read still unions evolved
-                    # columns into the empty result.
+                    # schema (evolved columns included) from the log.
                     if schema is not None:
                         return _empty_df(self.spark, schema)
                     return self._tracked_read(
-                        table, (mf or []) + pend,
-                        merge_schema=merge_schema).limit(0)
+                        table, (mf or []) + pend).limit(0)
 
             def _build(rs: list[str]) -> DataFrame:
-                return self._tracked_read(table, rs,
-                                          merge_schema=merge_schema)
+                return self._tracked_read(table, rs)
 
             dv_map = self._dv_state(table)
             if dv_map:
@@ -3778,13 +3964,11 @@ class Warehouse:
         (``meta.score = 5`` → bounds on the leaf's footer stats)
         without mistaking a table-alias-qualified reference for one."""
         try:
-            schema = self._declared_schema(table)
-            if schema is None:
-                schema = self.read(table).schema
-            return {f.name.lower() for f in schema.fields
-                    if isinstance(f.dataType, T.StructType)}
-        except Exception:  # pruning sharpness only, never correctness
+            schema = self._read_schema(table)[0]
+        except (FileNotFoundError, ValueError):  # no schema: no structs
             return set()
+        return {f.name.lower() for f in schema.fields
+                if isinstance(f.dataType, T.StructType)}
 
     # -- versioned rewrite tables -------------------------------------------
 
@@ -4191,8 +4375,6 @@ class Warehouse:
                 f"{sidecar} does not exist: no cdf=True merge has run "
                 f"for {table}"
             )
-        p = self._path(sidecar)
-        reader = self.spark.read.option("basePath", p)
         rewritten, range_txns = False, []
         if since_seq > 0:
             for seq in self._list_log()[0]:
@@ -4210,16 +4392,14 @@ class Warehouse:
             # file identity no longer partitions the feed — filter by
             # the merge transaction ids committed after since_seq (a
             # short driver-side literal list, O(commits in range))
-            allf = [os.path.join(p, r) for r in after]
-            return reader.parquet(*allf).where(
+            return self._tracked_read(sidecar, after).where(
                 F.col("_txn").isin([t for t in range_txns if t])
             )
         before = set(self._manifest_files(sidecar, at=since_seq) or [])
         new = [f for f in after if f not in before]
         if not new:
-            allf = [os.path.join(p, r) for r in after]
-            return reader.parquet(*allf).limit(0)
-        return reader.parquet(*[os.path.join(p, r) for r in new])
+            return self._tracked_read(sidecar, after).limit(0)
+        return self._tracked_read(sidecar, new)
 
     def restore(self, table: str, seq: int) -> None:
         """RESTORE the table to its state at commit ``seq`` (the Delta
@@ -4274,6 +4454,11 @@ class Warehouse:
             dvr = state_at.get("dv_rows", {}).get(table)
             if dvr:
                 txn.dv_rows[table] = dict(dvr)
+        # the snapshot's own schema list (footer-read when it predates the
+        # channel), never the head's: the relinked files are not this
+        # txn's, so the commit would otherwise keep the head's list
+        txn.file_schemas[table] = list(
+            self._recorded_file_schemas(table, at=seq))
         txn.commit()
 
     def merge_table(self, table: str, changes: DataFrame, key: str,

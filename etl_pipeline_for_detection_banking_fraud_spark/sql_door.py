@@ -134,11 +134,10 @@ def _register_relations(wh: Warehouse, spark, plan) -> None:
             except Exception:  # noqa: BLE001 — registration is best-effort
                 pass
         if wh._manifest_files(name) is not None or wh.exists(name):
-            try:
-                wh.read(name).createOrReplaceTempView(name)
-                _DOOR_VIEWS[name] = wh.root
-            except Exception:  # noqa: BLE001
-                pass
+            # a torn log or unreadable table must surface as ITS error,
+            # not as a later TABLE_OR_VIEW_NOT_FOUND
+            wh.read(name).createOrReplaceTempView(name)
+            _DOOR_VIEWS[name] = wh.root
 
 
 _TT = re.compile(

@@ -86,6 +86,7 @@ from ..sources.warehouse import (
     Warehouse,
     _data_files,
     _file_stats,
+    _footer_schema_json,
 )
 
 SOURCE_NAME = "warehouse_stream"
@@ -862,6 +863,9 @@ class _WarehouseStreamWriter(DataSourceStreamArrowWriter):
             st = _file_stats(os.path.join(table_dir, new))
             if st:
                 txn.stats.setdefault(self.table, {})[new] = st
+            if i == 0:  # every task writes the query's one schema
+                txn._note_schema(self.table, _footer_schema_json(
+                    os.path.join(table_dir, new)))
         txn.extra = {"stream_sink": {"sink": self.sink_id,
                                      "batch": batchId}}
         txn.commit()
