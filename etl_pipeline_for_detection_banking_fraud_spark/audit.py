@@ -8,10 +8,14 @@ degrade listing and scan parallelism on the audit table). Buffering
 keeps the audit SURFACE identical (same rows, same order) while the
 file count stays O(flushes) = O(days).
 
-Durability posture: ``status`` values other than SUCCESS autoflush, so
-a failing stage's ERROR row (and every buffered row before it) hits
-disk before the exception propagates even if the driver dies — the
-failure trail is never only in memory.
+Durability posture: only ``ERROR…`` statuses autoflush, each in its own
+immediate transaction, so a failing stage's ERROR row (and every
+buffered row before it) hits disk before the exception propagates even
+if the driver dies — the failure trail is never only in memory. Every
+other status (SUCCESS, and the streaming sink's ``COMMIT_…`` markers)
+stays buffered until the caller's ``flush_meta``, so it commits in the
+caller's transaction: a sink's marker can never become visible before
+the facts it vouches for.
 """
 
 from __future__ import annotations
@@ -30,13 +34,13 @@ TABLE = "meta_loading"
 
 def log_meta(wh: Warehouse, table_name: str, event_dt: datetime.date | None,
              rows_processed: int, status: str = "SUCCESS") -> None:
-    """Buffer one audit row; non-SUCCESS statuses flush immediately."""
+    """Buffer one audit row; ``ERROR…`` statuses flush immediately."""
     buf = getattr(wh, "_meta_buffer", None)
     if buf is None:
         buf = []
         wh._meta_buffer = buf
     buf.append((table_name, event_dt, int(rows_processed), status))
-    if status != "SUCCESS":
+    if status.startswith("ERROR"):
         # independent=True: an ERROR row must survive even if the
         # surrounding warehouse transaction aborts — it commits in its
         # own immediate transaction instead of the doomed one

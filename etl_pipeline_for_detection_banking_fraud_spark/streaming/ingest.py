@@ -181,14 +181,19 @@ def stream_to_warehouse(tx_stream: DataFrame, wh, checkpoint_dir: str,
     checkpoint replays a microbatch after a failure with the SAME query
     id and batch_id, so the sink logs a ``COMMIT_<query_id>_<batch_id>``
     marker row and skips any batch_id already marked for THIS query
-    identity. With ``atomic=True`` the fact append AND the marker/audit
-    rows ride in ONE warehouse commit-log transaction: there is no
-    crash point where the facts are visible but the marker isn't, so a
-    replay either sees the marker (skips — already fully committed) or
-    sees nothing (re-appends — nothing was visible). This closes the
-    round-4 caveat where a crash between the fact append and the marker
-    flush double-appended one microbatch. ``atomic=False`` keeps the
-    legacy flat-append layout with the documented at-least-once window.
+    identity. With ``atomic=True`` the fact files, the per-day audit
+    rows and the marker ride in ONE commit-log entry: there is no crash
+    point where the facts are visible but the marker isn't (or the
+    reverse), so a replay either sees the marker (skips — already fully
+    committed) or sees nothing (re-appends — nothing was visible).
+    ``atomic`` is accepted for signature compatibility and ignored:
+    every microbatch commits this way.
+
+    Cost per microbatch: two Spark jobs, the fact write and the audit
+    write. The per-day audit counts need no job: the fact is
+    partitioned by day, so each staged fact file holds one day, and its
+    footer row count (the ``__rows`` stat the transaction records) is
+    that file's share of the day.
 
     Marker scoping: batch ids restart at 0 under a fresh checkpoint, so
     an unscoped marker would make a legitimately new stream into the
@@ -201,7 +206,6 @@ def stream_to_warehouse(tx_stream: DataFrame, wh, checkpoint_dir: str,
     is read once and maintained driver-side, so the steady-state check
     is O(1), not a table read per batch.
     """
-    import contextlib as _ctx
     import json
     import os
 
@@ -228,25 +232,15 @@ def stream_to_warehouse(tx_stream: DataFrame, wh, checkpoint_dir: str,
         commit_status = (
             f"COMMIT_{qid}_{batch_id}" if qid else f"COMMIT_BATCH_{batch_id}"
         )
-        batch_df = batch_df.persist()
-        txn_scope = wh.transaction() if atomic else _ctx.nullcontext()
-        try:
-            with txn_scope:
-                wh.append_transactions(batch_df, table)
-                days = (
-                    batch_df.groupBy(F.to_date("transaction_date").alias("dt"))
-                    .count()
-                    .collect()
-                )
-                total = 0
-                for r in days:
-                    log_meta(wh, marker, r["dt"], r["count"])
-                    total += r["count"]
-                log_meta(wh, marker, None, total, commit_status)
-                flush_meta(wh)
-            state["committed"].add(batch_id)
-        finally:
-            batch_df.unpersist()
+        with wh.transaction() as txn:
+            wh.append_transactions(batch_df, table)
+            day_rows = _staged_day_rows(txn, table)
+            for day in sorted(day_rows, key=lambda d: (d is None, d)):
+                log_meta(wh, marker, day, day_rows[day])
+            log_meta(wh, marker, None, sum(day_rows.values()),
+                     commit_status)
+            flush_meta(wh)
+        state["committed"].add(batch_id)
 
     return (
         tx_stream.writeStream.foreachBatch(_write_batch)
@@ -254,6 +248,26 @@ def stream_to_warehouse(tx_stream: DataFrame, wh, checkpoint_dir: str,
         .outputMode("append")
         .start()
     )
+
+
+def _staged_day_rows(txn, table: str) -> dict:
+    """``{transaction day: rows}`` of the fact files ``txn`` staged,
+    from each file's day partition directory and its recorded footer
+    row count (no Spark job). A NULL ``transaction_date`` lands in the
+    default partition and counts under ``None``."""
+    import datetime
+
+    from ..sources.warehouse import _partition_pairs_of
+
+    out: dict = {}
+    for rel, n in txn.staged_rows(table).items():
+        if not n:
+            continue  # an empty batch's file
+        (_key, value), = _partition_pairs_of(rel)
+        day = None if value == "__HIVE_DEFAULT_PARTITION__" \
+            else datetime.date.fromisoformat(value)
+        out[day] = out.get(day, 0) + n
+    return out
 
 
 def sessionize_stream(events: DataFrame, gap: str = "30 minutes",
