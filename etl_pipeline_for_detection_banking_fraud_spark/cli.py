@@ -2,13 +2,16 @@
 
 The reference sequences days by hand-commenting blocks in main.py
 (main.py:85-100); this CLI discovers the day files present in --data and
-runs them in date order through the DailyBatch pipeline.
+runs them in date order through the DailyBatch pipeline. A --data
+directory with no transactions_DDMMYYYY file exits with status 2 before
+a Spark session starts or the seed DML is read.
 
 Usage:
     python -m etl_pipeline_for_detection_banking_fraud_spark.cli replay \
-        --data /root/reference/data/data --warehouse /tmp/wh \
-        [--seed-dml /root/reference/data/ddl_dml.sql] [--archive DIR] \
-        [--join-rules] [--fixed-idempotency]
+        --data FEED_DIR --warehouse WAREHOUSE_DIR --seed-dml SEED_DML_SQL \
+        [--archive DIR] [--join-rules] [--fixed-idempotency] [--incremental]
+
+--seed-dml defaults to the reference data's ddl_dml.sql.
 """
 
 from __future__ import annotations
@@ -54,6 +57,10 @@ def main(argv: list[str] | None = None) -> int:
                          "backdated blacklist entries) instead of the full fact history")
     args = ap.parse_args(argv)
 
+    days = discover_days(args.data)
+    if not days:
+        print(f"no transactions_DDMMYYYY files found in {args.data}", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="fraud_etl_cli")
     dims = load_seed_dims(spark, args.seed_dml)
     batch = DailyBatch(
@@ -63,10 +70,6 @@ def main(argv: list[str] | None = None) -> int:
         strict=not args.fixed_idempotency,
         incremental=args.incremental,
     )
-    days = discover_days(args.data)
-    if not days:
-        print(f"no transactions_DDMMYYYY files found in {args.data}", file=sys.stderr)
-        return 2
     for day in days:
         paths = {
             kind: os.path.join(args.data, f"{kind}_{day}.{ext}")

@@ -27,7 +27,6 @@ from etl_pipeline_for_detection_banking_fraud_spark.sources.warehouse import (
     Transaction,
     Warehouse,
 )
-from tests.conftest import DDL_DML
 
 
 def _tx_rows(spark, n, day=1, prefix="t"):
@@ -158,20 +157,14 @@ def test_compact_tracked_table_snapshot(spark, tmp_path):
     assert Warehouse(spark, root).read_transactions().count() == 24
 
 
-def test_batch_day_crash_and_rerun_no_duplicates(spark, tmp_path, monkeypatch):
+def test_batch_day_crash_and_rerun_no_duplicates(spark, feeds, tmp_path, monkeypatch):
     """DailyBatch(atomic=True): kill the day's single commit — nothing
     (facts, blacklist, mart, audit) is visible; the re-run lands every
     table exactly once. This is the batch half of the exactly-once
     claim; the reference analog is the one-Postgres-transaction commit
     in loading_rep_fraud.py:135."""
-    dims = load_seed_dims(spark, DDL_DML)
-    ref = "/root/reference/data/data"
-    feeds = [
-        os.path.join(ref, f)
-        for f in ("transactions_01032021.txt",
-                  "passport_blacklist_01032021.xlsx",
-                  "terminals_01032021.xlsx")
-    ]
+    dims = load_seed_dims(spark, feeds.seed_dml)
+    day1 = feeds.paths(0)
     root = str(tmp_path / "wh")
     batch = DailyBatch(spark, root, dims, atomic=True)
 
@@ -187,7 +180,7 @@ def test_batch_day_crash_and_rerun_no_duplicates(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(Transaction, "commit", crashing_commit)
     with pytest.raises(RuntimeError, match="simulated kill"):
-        batch.run_day(*feeds)
+        batch.run_day(*day1)
 
     fresh = Warehouse(spark, root)
     assert fresh.read_transactions().count() == 0
@@ -196,7 +189,7 @@ def test_batch_day_crash_and_rerun_no_duplicates(spark, tmp_path, monkeypatch):
     # re-run after the "restart" (input files are still in place —
     # archival happens after the commit point)
     batch2 = DailyBatch(spark, root, dims, atomic=True)
-    counts = batch2.run_day(*feeds)
+    counts = batch2.run_day(*day1)
     wh = Warehouse(spark, root)
     assert wh.read_transactions().count() == counts["stg_transactions"]
     assert (
@@ -210,21 +203,15 @@ def test_batch_day_crash_and_rerun_no_duplicates(spark, tmp_path, monkeypatch):
     assert mart.count() > 0
 
 
-def test_batch_atomic_matches_legacy_replay(spark, tmp_path):
+def test_batch_atomic_matches_legacy_replay(spark, feeds, tmp_path):
     """The atomic day produces byte-identical LOGICAL state to the
     legacy day: same fact rows, same mart rows."""
-    dims = load_seed_dims(spark, DDL_DML)
-    ref = "/root/reference/data/data"
-    feeds = [
-        os.path.join(ref, f)
-        for f in ("transactions_01032021.txt",
-                  "passport_blacklist_01032021.xlsx",
-                  "terminals_01032021.xlsx")
-    ]
+    dims = load_seed_dims(spark, feeds.seed_dml)
+    day1 = feeds.paths(0)
     legacy_root = str(tmp_path / "legacy")
     atomic_root = str(tmp_path / "atomic")
-    DailyBatch(spark, legacy_root, dims, atomic=False).run_day(*feeds)
-    DailyBatch(spark, atomic_root, dims, atomic=True).run_day(*feeds)
+    DailyBatch(spark, legacy_root, dims, atomic=False).run_day(*day1)
+    DailyBatch(spark, atomic_root, dims, atomic=True).run_day(*day1)
     lw, aw = Warehouse(spark, legacy_root), Warehouse(spark, atomic_root)
     assert (
         lw.read_transactions().exceptAll(aw.read_transactions()).count() == 0
@@ -239,7 +226,7 @@ def test_batch_atomic_matches_legacy_replay(spark, tmp_path):
 DAY1 = "transactions_01032021.txt"
 
 
-def test_streaming_crash_between_append_and_marker(spark, ref_data, tmp_path,
+def test_streaming_crash_between_append_and_marker(spark, feeds, tmp_path,
                                                    monkeypatch):
     """THE round-4 caveat, now closed: crash the sink between the fact
     append and the marker commit; the checkpoint replays the microbatch
@@ -248,7 +235,7 @@ def test_streaming_crash_between_append_and_marker(spark, ref_data, tmp_path,
 
     inbox = tmp_path / "inbox"
     inbox.mkdir()
-    shutil.copy(os.path.join(ref_data, DAY1), inbox / DAY1)
+    shutil.copy(os.path.join(feeds.dir, DAY1), inbox / DAY1)
     root = str(tmp_path / "wh")
     ckpt = str(tmp_path / "ckpt")
     wh = Warehouse(spark, root)
@@ -284,7 +271,7 @@ def test_streaming_crash_between_append_and_marker(spark, ref_data, tmp_path,
 
     got = Warehouse(spark, root).read_transactions()
     n = got.count()
-    assert n == 15650  # day-1 feed row count (golden)
+    assert n == len(feeds.days[0].tx)  # the rows the generator wrote
     assert got.select("transaction_id").distinct().count() == n
     meta = Warehouse(spark, root).read("meta_loading").toPandas()
     assert (meta.status.str.startswith("COMMIT_")).sum() == 1
@@ -326,28 +313,20 @@ def test_time_travel_reads(spark, tmp_path):
     ).count() == 15
 
 
-def test_incremental_atomic_matches_incremental_legacy(spark, tmp_path):
+def test_incremental_atomic_matches_incremental_legacy(spark, feeds, tmp_path):
     """The scale mode (incremental) composes with the exactly-once mode
     (atomic): identical mart over the 3-day replay. This is the
     production configuration — partition-pruned O(day) rules inside one
     commit-log transaction per day."""
-    dims = load_seed_dims(spark, DDL_DML)
-    ref = "/root/reference/data/data"
-
-    def feeds(day):
-        return (
-            os.path.join(ref, f"transactions_{day}.txt"),
-            os.path.join(ref, f"passport_blacklist_{day}.xlsx"),
-            os.path.join(ref, f"terminals_{day}.xlsx"),
-        )
+    dims = load_seed_dims(spark, feeds.seed_dml)
 
     legacy = DailyBatch(spark, str(tmp_path / "leg"), dims, incremental=True)
     atomic = DailyBatch(
         spark, str(tmp_path / "atm"), dims, incremental=True, atomic=True
     )
-    for day in ("01032021", "02032021", "03032021"):
-        legacy.run_day(*feeds(day))
-        atomic.run_day(*feeds(day))
+    for day in range(len(feeds.days)):
+        legacy.run_day(*feeds.paths(day))
+        atomic.run_day(*feeds.paths(day))
     lm, am = legacy.wh.read_mart(), atomic.wh.read_mart()
     assert lm.count() == am.count()
     assert lm.exceptAll(am).count() == 0 and am.exceptAll(lm).count() == 0

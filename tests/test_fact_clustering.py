@@ -8,7 +8,7 @@ directory, and the rules 3-4 lookback band read passes a manifest-stats
 time-band prune: yesterday's partition contributes only the files
 covering the final midnight-straddle hour.
 
-Proved here on the real 3-day banking replay (atomic + incremental
+Proved here on the seeded 3-day banking replay (atomic + incremental
 mode): the clustered run reads FEWER fact files for the band while the
 mart output stays identical to an unclustered control replay.
 """
@@ -25,16 +25,14 @@ pytestmark = pytest.mark.slow  # e2e/streaming/property lane
 from etl_pipeline_for_detection_banking_fraud_spark.pipeline import FACT_TX, DailyBatch
 from etl_pipeline_for_detection_banking_fraud_spark.sources.seed_dml import load_seed_dims
 
-from tests.conftest import DDL_DML, REFERENCE_DATA
-
 DAYS = ["01032021", "02032021", "03032021"]
 
 
-def _run_day(batch, d):
+def _run_day(batch, feeds, d):
     batch.run_day(
-        os.path.join(REFERENCE_DATA, f"transactions_{d}.txt"),
-        os.path.join(REFERENCE_DATA, f"passport_blacklist_{d}.xlsx"),
-        os.path.join(REFERENCE_DATA, f"terminals_{d}.xlsx"),
+        os.path.join(feeds.dir, f"transactions_{d}.txt"),
+        os.path.join(feeds.dir, f"passport_blacklist_{d}.xlsx"),
+        os.path.join(feeds.dir, f"terminals_{d}.xlsx"),
     )
 
 
@@ -52,23 +50,20 @@ def _band_read(batch, day):
     )
 
 
-@pytest.mark.skipif(
-    not os.path.isdir(REFERENCE_DATA), reason="reference data absent"
-)
-def test_optimize_facts_prunes_band_read_same_mart(spark, tmp_path):
-    dims = load_seed_dims(spark, DDL_DML)
+def test_optimize_facts_prunes_band_read_same_mart(spark, feeds, tmp_path):
+    dims = load_seed_dims(spark, feeds.seed_dml)
 
     # control: 3 days, never clustered
     control = DailyBatch(spark, str(tmp_path / "control"), dims,
                          incremental=True, atomic=True)
     for d in DAYS:
-        _run_day(control, d)
+        _run_day(control, feeds, d)
 
     # subject: cluster after day 2, then run day 3 over the clustered set
     subject = DailyBatch(spark, str(tmp_path / "subject"), dims,
                          incremental=True, atomic=True)
     for d in DAYS[:2]:
-        _run_day(subject, d)
+        _run_day(subject, feeds, d)
 
     day3 = datetime.date(2021, 3, 3)
     # First lay the files out clustered by an UNRELATED key (card_num):
@@ -77,7 +72,7 @@ def test_optimize_facts_prunes_band_read_same_mart(spark, tmp_path):
     # shape of any layout not organized by time (bucketed ingest,
     # hash compaction, card-clustered files). Pruning can skip nothing.
     # (The raw append layout happens to be near-time-sorted here
-    # because the reference feed is, which would mask clustering's win.)
+    # because the feed is, which would mask clustering's win.)
     subject.wh.cluster_table(FACT_TX, "card_num", n_files=12)
     files_before = len(_band_read(subject, day3).inputFiles())
     subject.optimize_facts()
@@ -92,7 +87,7 @@ def test_optimize_facts_prunes_band_read_same_mart(spark, tmp_path):
     assert files_after < files_before
     assert files_after < files_unpruned
 
-    _run_day(subject, DAYS[2])
+    _run_day(subject, feeds, DAYS[2])
 
     # identical mart output (full row equality, report_dt included)
     cols = sorted(control.wh.read("rep_fraud").columns)
@@ -106,21 +101,18 @@ def test_optimize_facts_prunes_band_read_same_mart(spark, tmp_path):
     )
 
 
-@pytest.mark.skipif(
-    not os.path.isdir(REFERENCE_DATA), reason="reference data absent"
-)
-def test_optimize_facts_zorder_serves_both_predicates(spark, tmp_path):
+def test_optimize_facts_zorder_serves_both_predicates(spark, feeds, tmp_path):
     """zorder_cards=True: the time-band read still prunes AND a
     full-history card scan (dt pruning can't help it) skips files —
     with the mart byte-identical to an unclustered control."""
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, feeds.seed_dml)
     control = DailyBatch(spark, str(tmp_path / "control"), dims,
                          incremental=True, atomic=True)
     subject = DailyBatch(spark, str(tmp_path / "subject"), dims,
                          incremental=True, atomic=True)
     for d in DAYS[:2]:
-        _run_day(control, d)
-        _run_day(subject, d)
+        _run_day(control, feeds, d)
+        _run_day(subject, feeds, d)
 
     day3 = datetime.date(2021, 3, 3)
     # worst-case baseline layout: files span each whole day time-wise
@@ -146,8 +138,8 @@ def test_optimize_facts_zorder_serves_both_predicates(spark, tmp_path):
     assert band_after < band_before
     assert cards_after < cards_before
 
-    _run_day(control, DAYS[2])
-    _run_day(subject, DAYS[2])
+    _run_day(control, feeds, DAYS[2])
+    _run_day(subject, feeds, DAYS[2])
     cols = sorted(control.wh.read("rep_fraud").columns)
     got = sorted(map(tuple, subject.wh.read("rep_fraud").select(*cols).collect()))
     want = sorted(map(tuple, control.wh.read("rep_fraud").select(*cols).collect()))

@@ -12,18 +12,16 @@ import os
 from etl_pipeline_for_detection_banking_fraud_spark.pipeline import DailyBatch
 from etl_pipeline_for_detection_banking_fraud_spark.sources.seed_dml import load_seed_dims
 
-from tests.conftest import DDL_DML
 
-
-def _day1(batch, ref_data):
+def _day1(batch, feeds):
     return batch.run_day(
-        os.path.join(ref_data, "transactions_01032021.txt"),
-        os.path.join(ref_data, "passport_blacklist_01032021.xlsx"),
-        os.path.join(ref_data, "terminals_01032021.xlsx"),
+        os.path.join(feeds.dir, "transactions_01032021.txt"),
+        os.path.join(feeds.dir, "passport_blacklist_01032021.xlsx"),
+        os.path.join(feeds.dir, "terminals_01032021.xlsx"),
     )
 
 
-def test_faithful_mode_rerun_double_inserts_rules_1_2(spark, ref_data, tmp_path):
+def test_faithful_mode_rerun_double_inserts_rules_1_2(spark, feeds, tmp_path):
     """SURVEY §5: re-running the fraud stage re-inserts rule-1/2 hits
     (the reference has no guard there) while rules 3/4 stay deduped."""
     import shutil
@@ -32,9 +30,9 @@ def test_faithful_mode_rerun_double_inserts_rules_1_2(spark, ref_data, tmp_path)
     workdir.mkdir()
     for stem in ("transactions_01032021.txt", "passport_blacklist_01032021.xlsx",
                  "terminals_01032021.xlsx"):
-        shutil.copy(os.path.join(ref_data, stem), workdir)
+        shutil.copy(os.path.join(feeds.dir, stem), workdir)
 
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, feeds.seed_dml)
     batch = DailyBatch(spark, str(tmp_path / "wh_strict"), dims, strict=True)
     counts = batch.run_day(
         str(workdir / "transactions_01032021.txt"),
@@ -51,16 +49,16 @@ def test_faithful_mode_rerun_double_inserts_rules_1_2(spark, ref_data, tmp_path)
     assert batch.wh.read("rep_fraud").count() == expected
 
 
-def test_fixed_mode_rerun_is_idempotent(spark, ref_data, tmp_path):
+def test_fixed_mode_rerun_is_idempotent(spark, feeds, tmp_path):
     import shutil
 
     workdir = tmp_path / "inbox"
     workdir.mkdir()
     for stem in ("transactions_01032021.txt", "passport_blacklist_01032021.xlsx",
                  "terminals_01032021.xlsx"):
-        shutil.copy(os.path.join(ref_data, stem), workdir)
+        shutil.copy(os.path.join(feeds.dir, stem), workdir)
 
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, feeds.seed_dml)
     batch = DailyBatch(spark, str(tmp_path / "wh"), dims, strict=False)
     counts = batch.run_day(
         str(workdir / "transactions_01032021.txt"),

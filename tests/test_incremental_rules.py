@@ -24,17 +24,16 @@ from etl_pipeline_for_detection_banking_fraud_spark.pipeline import DailyBatch
 from etl_pipeline_for_detection_banking_fraud_spark.sources.seed_dml import load_seed_dims
 from etl_pipeline_for_detection_banking_fraud_spark.sources.warehouse import Warehouse
 
-from tests.conftest import DDL_DML
 
 DAYS = ["01032021", "02032021", "03032021"]
 
 
-def _run_days(batch, ref_data):
+def _run_days(batch, feeds):
     for d in DAYS:
         batch.run_day(
-            os.path.join(ref_data, f"transactions_{d}.txt"),
-            os.path.join(ref_data, f"passport_blacklist_{d}.xlsx"),
-            os.path.join(ref_data, f"terminals_{d}.xlsx"),
+            os.path.join(feeds.dir, f"transactions_{d}.txt"),
+            os.path.join(feeds.dir, f"passport_blacklist_{d}.xlsx"),
+            os.path.join(feeds.dir, f"terminals_{d}.xlsx"),
         )
 
 
@@ -95,16 +94,16 @@ def test_mart_is_partitioned_and_prunes(spark, tmp_path):
     assert wh.read_mart().count() == 30
 
 
-def test_incremental_matches_faithful_hit_set(spark, ref_data, tmp_path):
+def test_incremental_matches_faithful_hit_set(spark, feeds, tmp_path):
     """3-day replay in both modes: identical distinct hit sets, including
     retroactive hits from backdated blacklist entries (the 03-03 feed
     carries entries dated 03-01)."""
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, feeds.seed_dml)
 
     faithful = DailyBatch(spark, str(tmp_path / "wh_f"), dims)
-    _run_days(faithful, ref_data)
+    _run_days(faithful, feeds)
     inc = DailyBatch(spark, str(tmp_path / "wh_i"), dims, incremental=True)
-    _run_days(inc, ref_data)
+    _run_days(inc, feeds)
 
     f_hits = _hit_set(faithful.wh.read("rep_fraud"))
     i_hits = _hit_set(inc.wh.read("rep_fraud"))

@@ -1,4 +1,4 @@
-"""MLlib fraud scorer: end-to-end on the reference replay data —
+"""MLlib fraud scorer: end-to-end on the seeded 3-day replay feeds —
 engineer features, weak-label from the rule engine, train, score, and
 check the model actually ranks rule-flagged transactions higher."""
 
@@ -20,24 +20,22 @@ from etl_pipeline_for_detection_banking_fraud_spark.sources.csv_source import (
 from etl_pipeline_for_detection_banking_fraud_spark.sources.seed_dml import load_seed_dims
 from etl_pipeline_for_detection_banking_fraud_spark.sources.xlsx import read_terminals
 
-from tests.conftest import DDL_DML
-
 
 @pytest.fixture(scope="module")
-def replay_day3(spark, ref_data):
+def replay_day3(spark, feeds):
     """Transactions of all 3 days + day-3 dimension state + rule hits."""
     tx = None
     for day in ("01032021", "02032021", "03032021"):
-        d = read_transactions(spark, os.path.join(ref_data, f"transactions_{day}.txt"))
+        d = read_transactions(spark, os.path.join(feeds.dir, f"transactions_{day}.txt"))
         tx = d if tx is None else tx.unionByName(d)
     hist = spark.createDataFrame([], schema=schemas.TERMINALS_HIST)
     for day, dg in (("01032021", (2021, 3, 1)), ("02032021", (2021, 3, 2)),
                     ("03032021", (2021, 3, 3))):
         import datetime
 
-        snap = read_terminals(spark, os.path.join(ref_data, f"terminals_{day}.xlsx"))
+        snap = read_terminals(spark, os.path.join(feeds.dir, f"terminals_{day}.xlsx"))
         hist = scd2.apply_increment(hist, snap, datetime.date(*dg)).persist()
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, feeds.seed_dml)
     return tx.persist(), hist, dims
 
 
@@ -103,8 +101,8 @@ def test_label_join_is_passport_scoped_not_timestamp_scoped(spark):
     assert labeled == {"t1": 1.0, "t2": 0.0}
 
 
-def test_extract_date_global_still_works(spark, ref_data):
-    tx = read_transactions(spark, os.path.join(ref_data, "transactions_01032021.txt"))
+def test_extract_date_global_still_works(spark, feeds):
+    tx = read_transactions(spark, os.path.join(feeds.dir, "transactions_01032021.txt"))
     import datetime
 
     assert extract_date_global(tx) == datetime.date(2021, 3, 1)

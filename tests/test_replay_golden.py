@@ -1,10 +1,13 @@
 """Golden 3-day replay: Spark engine vs independent DuckDB oracle.
 
-Runs the reference's own 3-day scenario (SURVEY §5) through the Spark
-pipeline AND through tests/ref_oracle.py's DuckDB transcription of the
-reference semantics, then compares warehouse state value-for-value:
-facts, the SCD2 dimension (as a multiset — duplicate versions are part
-of the faithful behavior), and the full fraud mart.
+Runs a seeded 3-day scenario (the ``feeds`` fixture: generated feeds in
+the reference formats, with the SCD2 signals of SURVEY §5 planted)
+through the Spark pipeline AND through tests/ref_oracle.py's DuckDB
+transcription of the reference semantics, then compares warehouse state
+value-for-value: facts, the SCD2 dimension (as a multiset — duplicate
+versions are part of the faithful behavior), and the full fraud mart.
+The reference data set's own counts are pinned in
+tests/test_reference_golden.py.
 """
 
 from __future__ import annotations
@@ -28,8 +31,6 @@ from etl_pipeline_for_detection_banking_fraud_spark.sources.xlsx import (
 
 from . import ref_oracle
 
-from tests.conftest import DDL_DML
-
 DAYS = ["01032021", "02032021", "03032021"]
 DATES = [datetime.date(2021, 3, d) for d in (1, 2, 3)]
 
@@ -51,10 +52,16 @@ def duck_rows_of(rel) -> list[tuple]:
 
 
 @pytest.fixture(scope="module")
-def replay(spark, ref_data, tmp_path_factory):
+def replay(spark, feeds, tmp_path_factory):
     """(spark warehouse state, duckdb oracle connection) after 3 days."""
+    return replay_with_oracle(spark, feeds.dir, feeds.seed_dml, tmp_path_factory)
+
+
+def replay_with_oracle(spark, feed_dir, seed_dml, tmp_path_factory):
+    """Replay the 3 days in ``feed_dir`` through DailyBatch and the
+    oracle; returns (batch, duckdb connection)."""
     root = str(tmp_path_factory.mktemp("wh"))
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, seed_dml)
     batch = DailyBatch(spark, root, dims, use_window_rules=True)
 
     con = ref_oracle.make_oracle()
@@ -70,7 +77,7 @@ def replay(spark, ref_data, tmp_path_factory):
         paths = {}
         for stem in (f"transactions_{day}.txt", f"passport_blacklist_{day}.xlsx",
                      f"terminals_{day}.xlsx"):
-            src = os.path.join(ref_data, stem)
+            src = os.path.join(feed_dir, stem)
             dst = os.path.join(workdir, stem)
             shutil.copy(src, dst)
             paths[stem.split("_")[0]] = dst
@@ -89,12 +96,16 @@ def replay(spark, ref_data, tmp_path_factory):
     return batch, con
 
 
-def test_fact_counts(replay):
+def test_fact_counts(replay, feeds):
     batch, con = replay
-    assert batch.wh.read_transactions().count() == 47116
-    assert batch.wh.read("dwh_fact_passport_blacklist").count() == 24
-    assert con.sql("SELECT count(*) FROM fact_tx").fetchone()[0] == 47116
-    assert con.sql("SELECT count(*) FROM fact_bl").fetchone()[0] == 24
+    n_tx = sum(len(feed.tx) for feed in feeds.days)
+    # the blacklist fact keeps each passport once; the last day's feed
+    # is cumulative, so it holds every entry
+    n_bl = len({passport for _dt, passport in feeds.days[-1].blacklist})
+    assert batch.wh.read_transactions().count() == n_tx
+    assert batch.wh.read("dwh_fact_passport_blacklist").count() == n_bl
+    assert con.sql("SELECT count(*) FROM fact_tx").fetchone()[0] == n_tx
+    assert con.sql("SELECT count(*) FROM fact_bl").fetchone()[0] == n_bl
 
 
 def test_blacklist_contents_match(replay):
@@ -135,9 +146,9 @@ def test_fraud_mart_matches_oracle(replay):
     assert spark_rows == duck_rows
 
 
-def test_audit_trail(replay):
+def test_audit_trail(replay, feeds):
     batch, _ = replay
     meta = batch.wh.read("meta_loading").toPandas()
     stg_tx = meta[meta.table_name == "stg_transactions"].sort_values("event_dt")
-    assert list(stg_tx.rows_processed) == [15650, 15686, 15780]
+    assert list(stg_tx.rows_processed) == [len(feed.tx) for feed in feeds.days]
     assert set(meta.status) == {"SUCCESS"}

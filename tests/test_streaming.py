@@ -24,10 +24,10 @@ def _start(df, name):
     )
 
 
-def test_stream_ingest_and_archive(spark, ref_data, tmp_path):
+def test_stream_ingest_and_archive(spark, feeds, tmp_path):
     inbox = tmp_path / "inbox"
     inbox.mkdir()
-    shutil.copy(os.path.join(ref_data, "transactions_01032021.txt"), inbox)
+    shutil.copy(os.path.join(feeds.dir, "transactions_01032021.txt"), inbox)
     archive = str(tmp_path / "archive")
 
     tx = ingest.read_transactions_stream(spark, str(inbox), archive_dir=archive)
@@ -36,7 +36,7 @@ def test_stream_ingest_and_archive(spark, ref_data, tmp_path):
     try:
         q.processAllAvailable()
         out = spark.sql("SELECT count(*) n FROM tx_stream_smoke").first()
-        assert out.n == 15650
+        assert out.n == len(feeds.days[0].tx)
         types = dict(spark.sql("SELECT * FROM tx_stream_smoke").dtypes)
         assert types["amount"] == "decimal(10,2)"
         assert types["transaction_date"] == "timestamp"
@@ -44,10 +44,10 @@ def test_stream_ingest_and_archive(spark, ref_data, tmp_path):
         q.stop()
 
 
-def test_stream_daily_counts(spark, ref_data, tmp_path):
+def test_stream_daily_counts(spark, feeds, tmp_path):
     inbox = tmp_path / "agg_in"
     inbox.mkdir()
-    shutil.copy(os.path.join(ref_data, "transactions_01032021.txt"), inbox)
+    shutil.copy(os.path.join(feeds.dir, "transactions_01032021.txt"), inbox)
     tx = ingest.read_transactions_stream(spark, str(inbox))
     agg = ingest.daily_counts(tx)
     q = (
@@ -59,7 +59,7 @@ def test_stream_daily_counts(spark, ref_data, tmp_path):
         rows = spark.sql(
             "SELECT tx_date, oper_result, n_tx FROM daily_counts_smoke ORDER BY oper_result"
         ).collect()
-        assert sum(r.n_tx for r in rows) == 15650
+        assert sum(r.n_tx for r in rows) == len(feeds.days[0].tx)
         assert {r.oper_result for r in rows} == {"SUCCESS", "REJECT"}
         assert all(r.tx_date == datetime.date(2021, 3, 1) for r in rows)
     finally:
@@ -94,7 +94,7 @@ def test_stream_pair_join(spark, tmp_path):
         q.stop()
 
 
-def test_stream_to_warehouse_fact_and_audit(spark, ref_data, tmp_path):
+def test_stream_to_warehouse_fact_and_audit(spark, feeds, tmp_path):
     """Streamed ingest lands in the same hive-partitioned fact layout as
     the batch path (partition-pruned reads work unchanged) and leaves
     one audit row per (microbatch, day)."""
@@ -105,7 +105,7 @@ def test_stream_to_warehouse_fact_and_audit(spark, ref_data, tmp_path):
     inbox = tmp_path / "wh_sink_in"
     inbox.mkdir()
     for d in ("01032021", "02032021", "03032021"):
-        shutil.copy(os.path.join(ref_data, f"transactions_{d}.txt"), inbox)
+        shutil.copy(os.path.join(feeds.dir, f"transactions_{d}.txt"), inbox)
     wh = Warehouse(spark, str(tmp_path / "wh"))
 
     tx = ingest.read_transactions_stream(spark, str(inbox))
@@ -115,24 +115,25 @@ def test_stream_to_warehouse_fact_and_audit(spark, ref_data, tmp_path):
     finally:
         q.stop()
 
+    day_rows_written = [len(feed.tx) for feed in feeds.days]
     fact = wh.read_transactions()
-    assert fact.count() == 15650 + 15686 + 15780
+    assert fact.count() == sum(day_rows_written)
     day2 = wh.read_transactions(
         since=datetime.date(2021, 3, 2), until=datetime.date(2021, 3, 2)
     )
     plan = day2._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
-    assert day2.count() == 15686
+    assert day2.count() == day_rows_written[1]
 
     meta = wh.read("meta_loading").toPandas()
     stream_rows = meta[meta.table_name == "stream_dwh_fact_transactions"]
     day_rows = stream_rows[stream_rows.status == "SUCCESS"]
-    assert sorted(day_rows.rows_processed) == [15650, 15686, 15780]
+    assert sorted(day_rows.rows_processed) == sorted(day_rows_written)
     commits = stream_rows[stream_rows.status.str.startswith("COMMIT_")]
     assert len(commits) == 3  # one marker per microbatch, scoped to the query id
 
 
-def test_stream_dedup_within_watermark(spark, ref_data, tmp_path):
+def test_stream_dedup_within_watermark(spark, feeds, tmp_path):
     """An upstream that re-delivers the same rows (two copies of the
     day-1 feed under different file names) must land each
     transaction_id once after dedup_transactions_stream."""
@@ -140,7 +141,7 @@ def test_stream_dedup_within_watermark(spark, ref_data, tmp_path):
 
     inbox = tmp_path / "dedup_in"
     inbox.mkdir()
-    src = os.path.join(ref_data, "transactions_01032021.txt")
+    src = os.path.join(feeds.dir, "transactions_01032021.txt")
     shutil.copy(src, inbox / "a.txt")
     shutil.copy(src, inbox / "b.txt")
     wh = Warehouse(spark, str(tmp_path / "wh"))
@@ -154,11 +155,12 @@ def test_stream_dedup_within_watermark(spark, ref_data, tmp_path):
     finally:
         q.stop()
     fact = wh.read_transactions()
-    assert fact.count() == 15650  # not 2 x 15650
-    assert fact.select("transaction_id").distinct().count() == 15650
+    n_day1 = len(feeds.days[0].tx)
+    assert fact.count() == n_day1  # not 2 x n_day1
+    assert fact.select("transaction_id").distinct().count() == n_day1
 
 
-def test_stream_to_warehouse_same_query_replay_is_idempotent(spark, ref_data, tmp_path):
+def test_stream_to_warehouse_same_query_replay_is_idempotent(spark, feeds, tmp_path):
     """A replayed microbatch under the SAME query identity (recovery
     after the checkpoint lost its offsets but kept its metadata — the
     batch ids come back identical) must not double-append fact rows:
@@ -171,7 +173,7 @@ def test_stream_to_warehouse_same_query_replay_is_idempotent(spark, ref_data, tm
     inbox = tmp_path / "wh_replay_in"
     inbox.mkdir()
     for d in ("01032021", "02032021"):
-        shutil.copy(os.path.join(ref_data, f"transactions_{d}.txt"), inbox)
+        shutil.copy(os.path.join(feeds.dir, f"transactions_{d}.txt"), inbox)
     wh = Warehouse(spark, str(tmp_path / "wh"))
 
     tx = ingest.read_transactions_stream(spark, str(inbox))
@@ -181,7 +183,7 @@ def test_stream_to_warehouse_same_query_replay_is_idempotent(spark, ref_data, tm
     finally:
         q.stop()
     n_first = wh.read_transactions().count()
-    assert n_first == 15650 + 15686
+    assert n_first == len(feeds.days[0].tx) + len(feeds.days[1].tx)
 
     # Simulate offsets-lost-metadata-kept recovery: a fresh checkpoint
     # dir pre-seeded with the SAME query id re-delivers batch_ids 0..1
@@ -203,7 +205,7 @@ def test_stream_to_warehouse_same_query_replay_is_idempotent(spark, ref_data, tm
     assert len(commits) == 2  # markers not duplicated either
 
 
-def test_stream_to_warehouse_new_query_is_not_skipped(spark, ref_data, tmp_path):
+def test_stream_to_warehouse_new_query_is_not_skipped(spark, feeds, tmp_path):
     """A genuinely NEW stream (fresh checkpoint => fresh query id) into
     the same warehouse must NOT be skipped by the old stream's markers —
     unscoped markers would silently drop its first batches (data loss).
@@ -213,7 +215,7 @@ def test_stream_to_warehouse_new_query_is_not_skipped(spark, ref_data, tmp_path)
 
     inbox = tmp_path / "new_query_in"
     inbox.mkdir()
-    shutil.copy(os.path.join(ref_data, "transactions_01032021.txt"), inbox)
+    shutil.copy(os.path.join(feeds.dir, "transactions_01032021.txt"), inbox)
     wh = Warehouse(spark, str(tmp_path / "wh"))
 
     q = ingest.stream_to_warehouse(
@@ -223,13 +225,13 @@ def test_stream_to_warehouse_new_query_is_not_skipped(spark, ref_data, tmp_path)
         q.processAllAvailable()
     finally:
         q.stop()
-    assert wh.read_transactions().count() == 15650
+    assert wh.read_transactions().count() == len(feeds.days[0].tx)
 
     # new data arrives, processed by a SECOND ingest job (own checkpoint,
     # batch ids restart at 0) — its batches must land, not be "skipped"
     inbox2 = tmp_path / "new_query_in2"
     inbox2.mkdir()
-    shutil.copy(os.path.join(ref_data, "transactions_02032021.txt"), inbox2)
+    shutil.copy(os.path.join(feeds.dir, "transactions_02032021.txt"), inbox2)
     q2 = ingest.stream_to_warehouse(
         ingest.read_transactions_stream(spark, str(inbox2)), wh, str(tmp_path / "ck2")
     )
@@ -237,7 +239,7 @@ def test_stream_to_warehouse_new_query_is_not_skipped(spark, ref_data, tmp_path)
         q2.processAllAvailable()
     finally:
         q2.stop()
-    assert wh.read_transactions().count() == 15650 + 15686
+    assert wh.read_transactions().count() == len(feeds.days[0].tx) + len(feeds.days[1].tx)
 
 
 def test_sessionize_stream_matches_batch(spark, sf001, tmp_path):

@@ -1,8 +1,8 @@
 """Streaming oracle coverage (r1 deferred item): the rule-3 stream-stream
 join and the stateful rule-4 machine, differentially checked against
-DuckDB transcriptions of their exact semantics on the reference's real
-3-day feed, plus planted late-data fixtures pinning watermark/state
-behavior across microbatches."""
+DuckDB transcriptions of their exact semantics on the seeded 3-day
+feed (the ``feeds`` fixture), plus planted late-data fixtures pinning
+watermark/state behavior across microbatches."""
 
 from __future__ import annotations
 
@@ -24,17 +24,17 @@ DAYS = ["01032021", "02032021", "03032021"]
 
 
 @pytest.fixture(scope="module")
-def replay_parquet(spark, ref_data, tmp_path_factory):
+def replay_parquet(spark, feeds, tmp_path_factory):
     """The 3-day feed, parsed by the engine's reader, as parquet both
     engines can read."""
     root = tmp_path_factory.mktemp("stream_oracle")
     tx = None
     for d in DAYS:
-        day = read_transactions(spark, os.path.join(ref_data, f"transactions_{d}.txt"))
+        day = read_transactions(spark, os.path.join(feeds.dir, f"transactions_{d}.txt"))
         tx = day if tx is None else tx.unionByName(day)
     tx_path = str(root / "tx.parquet")
     tx.coalesce(1).write.parquet(tx_path)
-    term = read_terminals(spark, os.path.join(ref_data, "terminals_03032021.xlsx"))
+    term = read_terminals(spark, os.path.join(feeds.dir, "terminals_03032021.xlsx"))
     term_path = str(root / "term.parquet")
     term.coalesce(1).write.parquet(term_path)
     return tx_path, term_path
@@ -59,7 +59,7 @@ def _naive(ts):
     return ts
 
 
-def test_stream_rule3_matches_duckdb_oracle_on_replay(spark, ref_data, tmp_path,
+def test_stream_rule3_matches_duckdb_oracle_on_replay(spark, feeds, tmp_path,
                                                       replay_parquet):
     """File-per-day stream through the watermarked self-join == the batch
     join semantics (no late data in the feed, so watermarking must not
@@ -68,9 +68,9 @@ def test_stream_rule3_matches_duckdb_oracle_on_replay(spark, ref_data, tmp_path,
     inbox = tmp_path / "r3_in"
     inbox.mkdir()
     for d in DAYS:
-        shutil.copy(os.path.join(ref_data, f"transactions_{d}.txt"), inbox)
+        shutil.copy(os.path.join(feeds.dir, f"transactions_{d}.txt"), inbox)
 
-    terminals = read_terminals(spark, os.path.join(ref_data, "terminals_03032021.xlsx"))
+    terminals = read_terminals(spark, os.path.join(feeds.dir, "terminals_03032021.xlsx"))
     hits = ingest.card_pairs_diff_city_stream(
         ingest.read_transactions_stream(spark, str(inbox)), terminals
     )
@@ -143,7 +143,7 @@ def test_stream_rule3_late_data_watermark_semantics(spark, tmp_path):
     assert got == [("X", datetime.datetime(2021, 3, 1, 12, 0))]
 
 
-def test_stateful_rule4_matches_duckdb_oracle_on_replay(spark, ref_data, tmp_path,
+def test_stateful_rule4_matches_duckdb_oracle_on_replay(spark, feeds, tmp_path,
                                                         replay_parquet):
     """The applyInPandasWithState machine over the 3-day feed (one file
     per microbatch, day order == time order) == a DuckDB transcription of
@@ -153,7 +153,7 @@ def test_stateful_rule4_matches_duckdb_oracle_on_replay(spark, ref_data, tmp_pat
     inbox = tmp_path / "r4_in"
     inbox.mkdir()
     for d in DAYS:
-        shutil.copy(os.path.join(ref_data, f"transactions_{d}.txt"), inbox)
+        shutil.copy(os.path.join(feeds.dir, f"transactions_{d}.txt"), inbox)
 
     hits = stateful.amount_guessing_stream(
         ingest.read_transactions_stream(spark, str(inbox))

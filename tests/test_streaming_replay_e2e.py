@@ -5,9 +5,12 @@ at-least-once re-delivery (duplicate copies of the day feeds under new
 file names => new batch ids, so markers can't catch them) and
 mid-stream restarts between days (offset recovery from the checkpoint,
 marker skip for any replayed batch id). The final warehouse must equal
-the batch replay's golden state: facts 47116 (all distinct), SCD2 hist
-157 rows, fraud mart 1100 rows — i.e. a user can swap EP1 for the
-streaming topology and the downstream rules cannot tell.
+the batch replay's golden state on the generated feeds: every fact row
+the generator wrote (all distinct), and the SCD2 hist and fraud mart
+row counts of the DuckDB oracle over the same feeds — i.e. a user can
+swap EP1 for the streaming topology and the downstream rules cannot
+tell. tests/test_reference_golden.py runs the same replay on the
+reference data set against its pinned counts.
 
 Covers VERDICT r3 item 6: the two idempotency layers (query-scoped
 COMMIT markers for whole-batch replays, watermark-bounded keyed dedup
@@ -40,11 +43,9 @@ from etl_pipeline_for_detection_banking_fraud_spark.sources.xlsx import (
 )
 from etl_pipeline_for_detection_banking_fraud_spark.streaming import ingest
 
-from tests.conftest import DDL_DML
 
 DAYS = ["01032021", "02032021", "03032021"]
 DATES = [datetime.date(2021, 3, d) for d in (1, 2, 3)]
-DAY_ROWS = [15650, 15686, 15780]
 
 
 def _drain(spark, inbox, wh, ckpt):
@@ -61,20 +62,32 @@ def _drain(spark, inbox, wh, ckpt):
         q.stop()
 
 
-def test_streaming_replay_matches_batch_golden(spark, ref_data, tmp_path):
+def test_streaming_replay_matches_batch_golden(spark, feeds, feeds_oracle, tmp_path):
+    check_streaming_replay(
+        spark, feeds.dir, feeds.seed_dml, tmp_path,
+        day_rows=[len(feed.tx) for feed in feeds.days],
+        hist_rows=feeds_oracle.sql("SELECT count(*) FROM hist").fetchone()[0],
+        mart_rows=feeds_oracle.sql("SELECT count(*) FROM mart").fetchone()[0],
+    )
+
+
+def check_streaming_replay(spark, feed_dir, seed_dml, tmp_path, day_rows,
+                           hist_rows, mart_rows):
+    """Stream the 3 days in ``feed_dir`` with re-delivery and restarts,
+    then check the warehouse against the batch golden counts."""
     inbox = tmp_path / "inbox"
     inbox.mkdir()
     root = str(tmp_path / "wh")
     wh = Warehouse(spark, root)
     ckpt = tmp_path / "ckpt"
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, seed_dml)
     # Rules run in the reference's faithful mode over the STREAMED facts;
     # blacklist/terminals keep their batch ingestion (the reference has
     # no streaming analogue for the xlsx feeds).
     batch = DailyBatch(spark, root, dims, use_window_rules=True)
 
-    for day, date_global, n_rows in zip(DAYS, DATES, DAY_ROWS):
-        src = os.path.join(ref_data, f"transactions_{day}.txt")
+    for day, date_global, n_rows in zip(DAYS, DATES, day_rows):
+        src = os.path.join(feed_dir, f"transactions_{day}.txt")
         shutil.copy(src, inbox / f"transactions_{day}.txt")
         # injected at-least-once re-delivery: same rows, NEW file name =>
         # the file source treats it as new input (new batch id), so only
@@ -87,7 +100,7 @@ def test_streaming_replay_matches_batch_golden(spark, ref_data, tmp_path):
         ).count() == n_rows, f"day {day}: re-delivered rows leaked past dedup"
 
         bl = read_passport_blacklist(
-            spark, os.path.join(ref_data, f"passport_blacklist_{day}.xlsx")
+            spark, os.path.join(feed_dir, f"passport_blacklist_{day}.xlsx")
         )
         existing = wh.read(FACT_BL, schemas.PASSPORT_BLACKLIST)
         wh.append(
@@ -96,17 +109,17 @@ def test_streaming_replay_matches_batch_golden(spark, ref_data, tmp_path):
             FACT_BL,
         )
         term = read_terminals(
-            spark, os.path.join(ref_data, f"terminals_{day}.xlsx")
+            spark, os.path.join(feed_dir, f"terminals_{day}.xlsx")
         )
         hist = wh.read(DIM_TERM, schemas.TERMINALS_HIST)
         wh.rewrite(scd2.apply_increment(hist, term, date_global), DIM_TERM)
         batch.run_fraud_rules(date_global)
 
     fact = wh.read_transactions()
-    assert fact.count() == sum(DAY_ROWS)  # 47116, the batch golden
-    assert fact.select("transaction_id").distinct().count() == sum(DAY_ROWS)
-    assert wh.read("dwh_dim_terminals_hist").count() == 157
-    assert wh.read("rep_fraud").count() == 1100  # test_replay_golden's mart
+    assert fact.count() == sum(day_rows)  # the batch golden
+    assert fact.select("transaction_id").distinct().count() == sum(day_rows)
+    assert wh.read("dwh_dim_terminals_hist").count() == hist_rows
+    assert wh.read("rep_fraud").count() == mart_rows  # test_replay_golden's mart
 
     # both idempotency layers actually engaged: >=3 sessions' markers
     # under ONE query id (restarts kept the identity), and the dedup
@@ -117,7 +130,7 @@ def test_streaming_replay_matches_batch_golden(spark, ref_data, tmp_path):
     assert commits.status.str.extract(r"COMMIT_(.+)_\d+$")[0].nunique() == 1
 
 
-def test_streaming_rule3_matches_batch_event_cities(spark, ref_data, tmp_path):
+def test_streaming_rule3_matches_batch_event_cities(spark, feeds, feeds_oracle, tmp_path):
     """VERDICT r4 item 5: the city-hop rule as a stateful streaming
     operator, parity-tested on the product scenario. The 3-day feed runs
     through city_hop_stream (state carried across mid-stream restarts
@@ -125,7 +138,8 @@ def test_streaming_rule3_matches_batch_event_cities(spark, ref_data, tmp_path):
     stream-static, the streaming analogue of the batch SCD2 as-of), the
     hits are projected to REP_FRAUD rows with the batch helpers, and
     the result must equal the batch golden mart's EVENT_CITIES rows
-    exactly (10 rows across the 3 days)."""
+    exactly (as many rows across the 3 days as the DuckDB oracle's
+    city rule gives on the same feeds)."""
     import pandas as pd
 
     from pyspark.sql import functions as F
@@ -133,16 +147,16 @@ def test_streaming_rule3_matches_batch_event_cities(spark, ref_data, tmp_path):
     from etl_pipeline_for_detection_banking_fraud_spark.operators import fraud_rules as fr
     from etl_pipeline_for_detection_banking_fraud_spark.streaming import stateful
 
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, feeds.seed_dml)
 
     # -- batch golden: full replay, keep only the city rule's rows ----------
     groot = str(tmp_path / "golden_wh")
     gbatch = DailyBatch(spark, groot, dims)
     for day in DAYS:
         gbatch.run_day(
-            os.path.join(ref_data, f"transactions_{day}.txt"),
-            os.path.join(ref_data, f"passport_blacklist_{day}.xlsx"),
-            os.path.join(ref_data, f"terminals_{day}.xlsx"),
+            os.path.join(feeds.dir, f"transactions_{day}.txt"),
+            os.path.join(feeds.dir, f"passport_blacklist_{day}.xlsx"),
+            os.path.join(feeds.dir, f"terminals_{day}.xlsx"),
         )
     golden = {
         (r.event_dt, r.passport, r.fio, r.phone, r.report_dt)
@@ -150,7 +164,11 @@ def test_streaming_rule3_matches_batch_event_cities(spark, ref_data, tmp_path):
         .where(F.col("event_type") == fr.EVENT_CITIES)
         .collect()
     }
-    assert len(golden) == 10  # the replay golden's city-rule share
+    oracle_cities = feeds_oracle.execute(
+        "SELECT count(*) FROM (SELECT DISTINCT event_dt, passport, fio, phone, "
+        "report_dt FROM mart WHERE event_type = ?)", [fr.EVENT_CITIES]
+    ).fetchone()[0]
+    assert len(golden) == oracle_cities  # the replay golden's city-rule share
 
     # -- streaming: one checkpoint across daily sessions --------------------
     inbox = tmp_path / "inbox_r3"
@@ -162,7 +180,7 @@ def test_streaming_rule3_matches_batch_event_cities(spark, ref_data, tmp_path):
     mart_acc = spark.createDataFrame([], schema=schemas.REP_FRAUD)
     for day, date_global in zip(DAYS, DATES):
         term = read_terminals(
-            spark, os.path.join(ref_data, f"terminals_{day}.xlsx")
+            spark, os.path.join(feeds.dir, f"terminals_{day}.xlsx")
         )
         hist = scd2.apply_increment(hist, term, date_global).localCheckpoint()
         snapshot = hist.where(
@@ -172,7 +190,7 @@ def test_streaming_rule3_matches_batch_event_cities(spark, ref_data, tmp_path):
         ).select("terminal_id", "terminal_city")
 
         shutil.copy(
-            os.path.join(ref_data, f"transactions_{day}.txt"),
+            os.path.join(feeds.dir, f"transactions_{day}.txt"),
             inbox / f"transactions_{day}.txt",
         )
         tx = ingest.read_transactions_stream(spark, str(inbox))
@@ -221,7 +239,7 @@ def test_streaming_rule3_matches_batch_event_cities(spark, ref_data, tmp_path):
     assert got == golden
 
 
-def test_streaming_full_mart_matches_incremental_batch(spark, ref_data, tmp_path):
+def test_streaming_full_mart_matches_incremental_batch(spark, feeds, tmp_path):
     """The full fraud MART computed by streaming topologies: rules 1-2
     as stateless stream-static joins (passport_hits_stream /
     contract_hits_stream), rules 3-4 as the stateful machines
@@ -240,16 +258,16 @@ def test_streaming_full_mart_matches_incremental_batch(spark, ref_data, tmp_path
     from etl_pipeline_for_detection_banking_fraud_spark.operators import fraud_rules as fr
     from etl_pipeline_for_detection_banking_fraud_spark.streaming import stateful
 
-    dims = load_seed_dims(spark, DDL_DML)
+    dims = load_seed_dims(spark, feeds.seed_dml)
     cards, accounts, clients = dims["cards"], dims["accounts"], dims["clients"]
 
     # -- golden: incremental batch replay -----------------------------------
     gbatch = DailyBatch(spark, str(tmp_path / "golden_wh"), dims, incremental=True)
     for day in DAYS:
         gbatch.run_day(
-            os.path.join(ref_data, f"transactions_{day}.txt"),
-            os.path.join(ref_data, f"passport_blacklist_{day}.xlsx"),
-            os.path.join(ref_data, f"terminals_{day}.xlsx"),
+            os.path.join(feeds.dir, f"transactions_{day}.txt"),
+            os.path.join(feeds.dir, f"passport_blacklist_{day}.xlsx"),
+            os.path.join(feeds.dir, f"terminals_{day}.xlsx"),
         )
     # read_mart, not read: the incremental mart is hive-partitioned and a
     # raw read would carry the physical dt column into the tuples
@@ -288,7 +306,7 @@ def test_streaming_full_mart_matches_incremental_batch(spark, ref_data, tmp_path
         # feeds: shared inbox (stateful) + per-day inbox (stateless)
         day_inbox = tmp_path / f"s_inbox_{day}"
         day_inbox.mkdir()
-        src = os.path.join(ref_data, f"transactions_{day}.txt")
+        src = os.path.join(feeds.dir, f"transactions_{day}.txt")
         shutil.copy(src, inbox / f"transactions_{day}.txt")
         shutil.copy(src, day_inbox / f"transactions_{day}.txt")
 
@@ -305,7 +323,7 @@ def test_streaming_full_mart_matches_incremental_batch(spark, ref_data, tmp_path
         # reference feeds: cumulative blacklist + SCD2 dim (batch-side,
         # same as the ingest e2e — the reference has no streaming xlsx)
         bl = read_passport_blacklist(
-            spark, os.path.join(ref_data, f"passport_blacklist_{day}.xlsx")
+            spark, os.path.join(feeds.dir, f"passport_blacklist_{day}.xlsx")
         )
         bl_full = (
             bl_full.unionByName(
@@ -313,7 +331,7 @@ def test_streaming_full_mart_matches_incremental_batch(spark, ref_data, tmp_path
                 .select("date", "passport")
             ).localCheckpoint()
         )
-        term = read_terminals(spark, os.path.join(ref_data, f"terminals_{day}.xlsx"))
+        term = read_terminals(spark, os.path.join(feeds.dir, f"terminals_{day}.xlsx"))
         hist = scd2.apply_increment(hist, term, date_global).localCheckpoint()
         snapshot = hist.where(
             (~F.col("deleted_flg"))
