@@ -3,8 +3,8 @@
 The reference sequences days by hand-commenting blocks in main.py
 (main.py:85-100); this CLI discovers the day files present in --data and
 runs them in date order through the DailyBatch pipeline. A --data
-directory with no transactions_DDMMYYYY file exits with status 2 before
-a Spark session starts or the seed DML is read.
+directory with no transactions_DDMMYYYY file, or a --seed-dml path that
+is not a file, exits with status 2 before a Spark session starts.
 
 Usage:
     python -m etl_pipeline_for_detection_banking_fraud_spark.cli replay \
@@ -60,6 +60,10 @@ def main(argv: list[str] | None = None) -> int:
     days = discover_days(args.data)
     if not days:
         print(f"no transactions_DDMMYYYY files found in {args.data}", file=sys.stderr)
+        return 2
+    if not os.path.isfile(args.seed_dml):
+        print(f"--seed-dml {args.seed_dml} is not a file; pass the seed "
+              "DML script (ddl_dml.sql) of the feeds", file=sys.stderr)
         return 2
     spark = get_spark(app_name="fraud_etl_cli")
     dims = load_seed_dims(spark, args.seed_dml)

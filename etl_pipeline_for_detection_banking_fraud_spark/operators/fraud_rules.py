@@ -16,9 +16,16 @@ Two formulations of the self-join rules (3 and 4):
   survives 100 TB. Both are tested equivalent on planted fixtures and
   on the reference's own 3-day replay.
 
-Dimension sides (cards/accounts/clients/terminal history) are broadcast:
-they are key-bounded (cards per bank, terminals per bank), not
-data-volume-bounded, so they stay broadcastable even at 100 TB of facts.
+Dimension sides are broadcast: they are key-bounded (cards per bank,
+terminals per bank), not data-volume-bounded, so they stay broadcastable
+even at 100 TB of facts. The J1 chain (cards -> accounts -> clients) is
+one broadcast of the pre-joined card -> client frame (``card_clients``),
+not three: ``DailyBatch`` builds that frame once per run and passes it
+as ``cards`` with ``accounts`` and ``clients`` None; direct callers may
+still pass the three dimensions.
+
+The window forms plan their hot-card ``applyInPandas`` branch only when
+the caller's ``max_card_rows`` bound lets a card cross a threshold.
 """
 
 from __future__ import annotations
@@ -37,23 +44,45 @@ EVENT_CITIES = "ops in diff cities less one hour"
 EVENT_AMOUNT = "amount guessing"
 
 
-def enrich_client(tx: DataFrame, cards: DataFrame, accounts: DataFrame,
-                  clients: DataFrame) -> DataFrame:
-    """The J1 broadcast chain: transactions -> cards -> accounts -> clients
-    (reference: loading_rep_fraud.py:25-27 and siblings)."""
-    ca = F.broadcast(cards.select("card_num", "account"))
-    ac = F.broadcast(accounts.select("account", "valid_to", "client"))
-    cl = F.broadcast(
-        clients.select(
-            "client_id", "last_name", "first_name", "patronymic",
-            "passport_num", "passport_valid_to", "phone",
-        )
-    )
+CARD_CLIENT_COLS = (
+    "card_num", "valid_to", "last_name", "first_name", "patronymic",
+    "passport_num", "passport_valid_to", "phone",
+)
+
+
+def card_clients(cards: DataFrame, accounts: DataFrame,
+                 clients: DataFrame) -> DataFrame:
+    """The static half of the J1 chain: cards -> accounts -> clients, one
+    row per card with every column a rule reads (``CARD_CLIENT_COLS``).
+    The joins are inner joins keyed through ``card_num``, so joining the
+    dimensions first and the transactions last gives the same rows as
+    the reference's left-deep chain."""
     return (
-        tx.join(ca, "card_num")
-        .join(ac, "account")
-        .join(cl, F.col("client") == F.col("client_id"))
+        cards.select("card_num", "account")
+        .join(F.broadcast(accounts.select("account", "valid_to", "client")), "account")
+        .join(
+            F.broadcast(clients.select(
+                F.col("client_id").alias("client"), "last_name", "first_name",
+                "patronymic", "passport_num", "passport_valid_to", "phone",
+            )),
+            "client",
+        )
+        .select(*CARD_CLIENT_COLS)
     )
+
+
+def enrich_client(tx: DataFrame, cards: DataFrame, accounts: DataFrame | None = None,
+                  clients: DataFrame | None = None) -> DataFrame:
+    """The J1 chain (reference: loading_rep_fraud.py:25-27 and siblings)
+    as ONE broadcast join of ``tx`` with the card -> client frame.
+
+    ``cards`` is either the cards dimension, with ``accounts`` and
+    ``clients`` beside it, or a frame ``card_clients`` already built
+    (``accounts`` and ``clients`` None). ``DailyBatch`` builds that frame
+    once per run and hands it to every rule."""
+    cc = cards if accounts is None and clients is None \
+        else card_clients(cards, accounts, clients)
+    return tx.join(F.broadcast(cc), "card_num")
 
 
 def _report(df: DataFrame, event_dt: Column, event_type: str,
@@ -262,7 +291,8 @@ def rule3_diff_cities_window(tx: DataFrame, cards: DataFrame, accounts: DataFram
                              clients: DataFrame, terminals_hist: DataFrame,
                              existing_mart: DataFrame,
                              date_global: datetime.date,
-                             hot_card_threshold: int = 4096) -> DataFrame:
+                             hot_card_threshold: int = 4096,
+                             max_card_rows: int | None = None) -> DataFrame:
     """Production formulation: trailing-hour range frame per card.
 
     A transaction is fraudulent iff some earlier same-card transaction
@@ -287,23 +317,38 @@ def rule3_diff_cities_window(tx: DataFrame, cards: DataFrame, accounts: DataFram
     window count (reusing the card_num exchange/sort) and routed
     through the exact O(k)-total two-pointer scan in
     ``_rule3_hot_card_hits``.
+
+    ``max_card_rows``, when given, is an upper bound on any one card's
+    row count in ``tx``, and so on its band population. At or below
+    ``hot_card_threshold`` no card can be hot: only the cold path is
+    planned, with no routing windows and no ``applyInPandas`` branch.
+    Without the bound both branches are planned. Either branch is
+    exact, so the bound decides the plan, never the hits.
     """
     with_city = _city_asof(tx, terminals_hist, "c").withColumn(
         "_ts_sec", F.col("transaction_date").cast("long")
     )
     w = Window.partitionBy("card_num").orderBy("_ts_sec").rangeBetween(-3599, -1)
-    # routing measure counts ALL frame rows (count(lit(1)), not
-    # count(c_city)): null-city rows are invisible to the rule but the
-    # frame recompute still scans them — counting only non-null cities
-    # would leave a null-city-heavy bot on the O(k^2) cold path
-    marked = with_city.withColumn(
-        "_n_prior", F.count(F.lit(1)).over(w)
-    ).withColumn(
-        "_card_peak", F.max("_n_prior").over(Window.partitionBy("card_num"))
-    )
-    cold_flagged = (
-        marked.where(F.col("_card_peak") <= hot_card_threshold)
-        .withColumn("_min_city", F.min("c_city").over(w))
+    cold = with_city
+    hot_flagged = None
+    if max_card_rows is None or max_card_rows > hot_card_threshold:
+        # routing measure counts ALL frame rows (count(lit(1)), not
+        # count(c_city)): null-city rows are invisible to the rule but the
+        # frame recompute still scans them — counting only non-null cities
+        # would leave a null-city-heavy bot on the O(k^2) cold path
+        marked = with_city.withColumn(
+            "_n_prior", F.count(F.lit(1)).over(w)
+        ).withColumn(
+            "_card_peak", F.max("_n_prior").over(Window.partitionBy("card_num"))
+        )
+        cold = marked.where(F.col("_card_peak") <= hot_card_threshold)
+        hot_flagged = _rule3_hot_card_hits(
+            marked.where(F.col("_card_peak") > hot_card_threshold).select(
+                "card_num", "transaction_date", "_ts_sec", "c_city", "oper_result"
+            )
+        )
+    flagged = (
+        cold.withColumn("_min_city", F.min("c_city").over(w))
         .withColumn("_max_city", F.max("c_city").over(w))
         .where(
             (F.col("oper_result") == "SUCCESS")
@@ -314,14 +359,11 @@ def rule3_diff_cities_window(tx: DataFrame, cards: DataFrame, accounts: DataFram
         )
         .select("card_num", "transaction_date")
     )
-    hot_flagged = _rule3_hot_card_hits(
-        marked.where(F.col("_card_peak") > hot_card_threshold).select(
-            "card_num", "transaction_date", "_ts_sec", "c_city", "oper_result"
-        )
-    )
-    hits = enrich_client(
-        cold_flagged.unionByName(hot_flagged).distinct(), cards, accounts, clients
-    )
+    if hot_flagged is not None:
+        flagged = flagged.unionByName(hot_flagged)
+    # repeated (card_num, transaction_date) hits are left to the closing
+    # dropDuplicates on (event_dt, passport), which removes them too
+    hits = enrich_client(flagged, cards, accounts, clients)
     cand = _report(hits, F.col("transaction_date"), EVENT_CITIES, date_global)
     deduped = _dedup_against(cand, existing_mart, EVENT_CITIES)
     return deduped.dropDuplicates(["event_dt", "passport"])
@@ -425,7 +467,8 @@ def rule4_amount_guessing_window(tx: DataFrame, cards: DataFrame, accounts: Data
                                  clients: DataFrame, existing_mart: DataFrame,
                                  date_global: datetime.date,
                                  hot_card_threshold: int = 512,
-                                 hot_card_cpu_threshold: int = 8192) -> DataFrame:
+                                 hot_card_cpu_threshold: int = 8192,
+                                 max_card_rows: int | None = None) -> DataFrame:
     """Production formulation: trailing-20-minute frame + array EXISTS,
     with a hot-card overflow path bounding per-row memory.
 
@@ -453,30 +496,50 @@ def rule4_amount_guessing_window(tx: DataFrame, cards: DataFrame, accounts: Data
     few REJECTs is memory-safe yet still an O(k^2)-CPU straggler task.
     Either axis over its threshold routes the card to the O(k) exact
     path.
+
+    ``max_card_rows``, when given, is an upper bound on any one card's
+    row count in ``tx``; it bounds both routing measures. At or below
+    the smaller threshold no card can be hot: only the cold path is
+    planned, with no routing windows and no ``applyInPandas`` branch.
+    Without the bound both branches are planned. Either branch is
+    exact, so the bound decides the plan, never the hits.
     """
     base = tx.withColumn("_ts_sec", F.col("transaction_date").cast("long"))
     w = Window.partitionBy("card_num").orderBy("_ts_sec").rangeBetween(-1199, -1)
     is_rej = F.col("oper_result") == "REJECT"
-    card_w = Window.partitionBy("card_num")
-    marked = base.withColumn(
-        "_band_rej", F.count(F.when(is_rej, 1)).over(w)
-    ).withColumn(
-        "_card_peak", F.max("_band_rej").over(card_w)
-    ).withColumn(
-        "_card_peak_all", F.max(F.count(F.lit(1)).over(w)).over(card_w)
-    )
+    cold = base
+    hot_flagged = None
+    if max_card_rows is None or max_card_rows > min(hot_card_threshold,
+                                                     hot_card_cpu_threshold):
+        card_w = Window.partitionBy("card_num")
+        marked = base.withColumn(
+            "_band_rej", F.count(F.when(is_rej, 1)).over(w)
+        ).withColumn(
+            "_card_peak", F.max("_band_rej").over(card_w)
+        ).withColumn(
+            "_card_peak_all", F.max(F.count(F.lit(1)).over(w)).over(card_w)
+        )
+        is_hot = (F.col("_card_peak") > hot_card_threshold) | (
+            F.col("_card_peak_all") > hot_card_cpu_threshold
+        )
+        cold = marked.where(~is_hot)
+        hot_flagged = _rule4_hot_card_hits(
+            marked.where(is_hot).select(
+                "card_num",
+                "transaction_date",
+                "_ts_sec",
+                (F.col("amount") * 100).cast("long").alias("_am_cents"),
+                "oper_result",
+            )
+        )
     trail = F.collect_list(
         F.when(
             is_rej,
             F.struct(F.col("_ts_sec").alias("ts"), F.col("amount").alias("am")),
         )
     ).over(w)
-    is_hot = (F.col("_card_peak") > hot_card_threshold) | (
-        F.col("_card_peak_all") > hot_card_cpu_threshold
-    )
-    cold_flagged = (
-        marked.where(~is_hot)
-        .withColumn("_trail", trail)
+    flagged = (
+        cold.withColumn("_trail", trail)
         .where(F.col("oper_result") == "SUCCESS")
         .where(
             F.exists(
@@ -490,18 +553,9 @@ def rule4_amount_guessing_window(tx: DataFrame, cards: DataFrame, accounts: Data
         )
         .select("card_num", "transaction_date")
     )
-    hot_flagged = _rule4_hot_card_hits(
-        marked.where(is_hot).select(
-            "card_num",
-            "transaction_date",
-            "_ts_sec",
-            (F.col("amount") * 100).cast("long").alias("_am_cents"),
-            "oper_result",
-        )
-    )
-    hits = enrich_client(
-        cold_flagged.unionByName(hot_flagged).distinct(), cards, accounts, clients
-    )
+    if hot_flagged is not None:
+        flagged = flagged.unionByName(hot_flagged)
+    hits = enrich_client(flagged, cards, accounts, clients)
     cand = _report(hits, F.col("transaction_date"), EVENT_AMOUNT, date_global)
     deduped = _dedup_against(cand, existing_mart, EVENT_AMOUNT)
     return deduped.dropDuplicates(["event_dt", "passport"])

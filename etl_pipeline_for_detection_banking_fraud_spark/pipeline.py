@@ -10,10 +10,11 @@ Re-implements the reference's linear main.py flow (EP1-EP3, SURVEY §3):
    (incr_loading.py:13-129)
 4. the four fraud rules into REP_FRAUD (loading_rep_fraud.py:14-135).
    The reference runs all four inserts in ONE Postgres transaction, so
-   rule n's NOT-EXISTS dedup sees rules 1..n-1's same-run writes. We
-   reproduce that visibility by accumulating this run's hits in a
-   DataFrame union and anti-joining against (stored mart ∪ accumulator),
-   then appending once at the end.
+   rule n's NOT-EXISTS dedup sees rules 1..n-1's same-run writes. That
+   visibility changes nothing here: each dedup keeps only mart rows of
+   its own rule's event type, and no rule emits another rule's type, so
+   every rule anti-joins against the stored mart alone. The four rule
+   frames become one union, appended once at the end.
 5. audit rows into META_LOADING throughout; processed files archived.
 
 Faithful-by-default: rules 1-2 have no idempotency guard in the
@@ -24,6 +25,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime
+import functools
 import os
 import shutil
 
@@ -32,7 +34,7 @@ from pyspark.sql import functions as F
 
 from . import schemas
 from .audit import flush_meta, log_meta
-from .functions.localframe import empty_df
+from .functions.localframe import local_rows_df
 from .operators import fraud_rules, scd2
 from .sources.csv_source import count_and_date_global, read_transactions
 from .sources.warehouse import Warehouse
@@ -42,6 +44,14 @@ FACT_TX = "dwh_fact_transactions"
 FACT_BL = "dwh_fact_passport_blacklist"
 DIM_TERM = "dwh_dim_terminals_hist"
 MART = "rep_fraud"
+
+# (audit stage, count key, event type) per rule, in the reference's order
+RULE_AUDIT = (
+    ("REP_FRAUD_passport", "rep_fraud_passport", fraud_rules.EVENT_PASSPORT),
+    ("REP_FRAUD_contract", "rep_fraud_contract", fraud_rules.EVENT_CONTRACT),
+    ("REP_FRAUD_diff_cities", "rep_fraud_diff_cities", fraud_rules.EVENT_CITIES),
+    ("REP_FRAUD_attempt_amount", "rep_fraud_attempt_amount", fraud_rules.EVENT_AMOUNT),
+)
 
 
 class DailyBatch:
@@ -81,6 +91,7 @@ class DailyBatch:
         self.lookback_days = lookback_days
         self.atomic = atomic
         self.cache_faithful_scans = cache_faithful_scans
+        self._card_client_df: DataFrame | None = None
 
     # Widest pair window any rule needs from the previous day: rule 3's
     # trailing 3599s frame (rule 4's decreasing triples span <1200s).
@@ -261,16 +272,15 @@ class DailyBatch:
         tx = tx_day
         bl = self.wh.read(FACT_BL, schemas.PASSPORT_BLACKLIST)
         hist = self.wh.read(DIM_TERM, schemas.TERMINALS_HIST)
-        cards, accounts, clients = (
-            self.dims["cards"], self.dims["accounts"], self.dims["clients"],
-        )
         # Retro range for rule 1 (computed up front so the mart read below
         # can prune to it): a BACKDATED blacklist entry arriving today must
-        # flag older transactions dated after it.
+        # flag older transactions dated after it. An entry dated yesterday
+        # flags transactions from today on, which the current-day term
+        # already covers, so its retro range [today, yesterday] is empty.
         retro_lo: datetime.date | None = None
         if self.incremental and bl_delta is not None:
             min_bl = bl_delta.agg(F.min("date")).first()[0]
-            if min_bl is not None and min_bl < date_global:
+            if min_bl is not None and min_bl + datetime.timedelta(days=1) < date_global:
                 retro_lo = min_bl + datetime.timedelta(days=1)
         if self.incremental:
             # The rules' NOT-EXISTS dedup joins on event_dt EQUALITY and
@@ -287,12 +297,7 @@ class DailyBatch:
             stored = self.wh.read_mart(MART)
 
         counts: dict[str, int] = {}
-        # zero-partition empty frame: a python-sliced empty would cost
-        # one worker round-trip per slice in EVERY action over the
-        # accumulator union (see functions/localframe.py)
-        acc = empty_df(self.spark, schemas.REP_FRAUD)
         persisted = []
-        deferred: list[tuple[str, str, DataFrame]] = []
         if not self.incremental and self.cache_faithful_scans:
             # Faithful mode derives every rule from the SAME full-history
             # fact scan and full mart (the reference's posture); each
@@ -312,30 +317,14 @@ class DailyBatch:
             persisted.extend([tx, stored])
 
         def settle(df, audit_name, short):
-            """Materialize one rule's hits once (each result feeds the
-            count, later rules' dedup visibility, and the final write —
-            without persist the whole rule subtree would re-execute for
-            each of those).
-
-            Faithful mode counts each rule eagerly — one Spark job per
-            rule, preserving the reference's per-stage audit rows AND
-            per-stage ERROR attribution. Incremental (scale) mode defers
-            the counts until after the final mart write instead: the
-            write materializes all four cached rule subtrees in ONE job,
-            and the post-write counts read the caches (partition-local,
-            no recompute) — four heavy job launches become four trivial
-            ones per day. The audit still gets one row per rule in the
-            same buffer order, but a failing rule surfaces under the
-            combined REP_FRAUD_rules stage. (An Observation metric on
-            the write would drop even the trivial jobs, but a lingering
-            ObservationManager reference poisons later task-closure
-            serialization on the shared session — SparkException: Task
-            not serializable — so counts come from the caches.)"""
-            if self.incremental:
-                df = df.persist()
-                persisted.append(df)
-                deferred.append((audit_name, short, df))
-                return df
+            """Faithful mode materializes and counts each rule eagerly,
+            one Spark job per rule, preserving the reference's per-stage
+            audit rows AND per-stage ERROR attribution; the mart append
+            then writes the union of the four caches. (Incremental mode
+            does not settle: its four rules stay one lazy plan, persisted
+            once as a union, written once and counted by one grouped
+            aggregate over that cache, so a failing rule surfaces under
+            the combined REP_FRAUD_rules stage.)"""
             with self._audited_stage(audit_name, date_global):
                 df = df.persist()
                 persisted.append(df)
@@ -343,14 +332,26 @@ class DailyBatch:
                 log_meta(self.wh, audit_name, date_global, counts[short])
             return df
 
+        # one broadcast of the card -> client frame per rule, not three
+        dims = (self._card_clients(), None, None)
+        # The busiest card's row count in the band bounds every hot-card
+        # routing measure of rules 3-4 from above; a rule whose threshold
+        # it does not exceed plans only its cold path. (A top-1 sort runs
+        # one job fewer than a global max over the per-card counts.)
+        max_card_rows = None
+        if self.use_window_rules:
+            with self._audited_stage("REP_FRAUD_rules", date_global):
+                busiest = tx_band.groupBy("card_num").count() \
+                    .orderBy(F.desc("count")).first()
+            max_card_rows = busiest["count"] if busiest else 0
+
         guard_12 = (not self.strict) or self.incremental
-        r1 = fraud_rules.rule1_passport(tx, cards, accounts, clients, bl, date_global)
+        r1 = fraud_rules.rule1_passport(tx, *dims, bl, date_global)
         if retro_lo is not None:
             # Retroactive term: re-scan only the partition-pruned band
-            # (min delta date, today) against ONLY the delta entries —
+            # (min delta date, yesterday) against ONLY the delta entries —
             # O(delta window), not O(history); skipped entirely on days
-            # with no backdated entries (retro_lo is None when every
-            # delta entry is dated today or later — the common case:
+            # with no entry backdated past yesterday (the common case:
             # feeds date new entries the day they arrive; the
             # current-day term already covers those).
             retro_tx = self.wh.read_transactions(
@@ -363,38 +364,64 @@ class DailyBatch:
             # Expiry-predicate re-hits on retro days are removed by the
             # stored-mart guard below.
             r1 = r1.unionByName(
-                fraud_rules.rule1_passport(
-                    retro_tx, cards, accounts, clients, bl_delta, date_global
-                )
+                fraud_rules.rule1_passport(retro_tx, *dims, bl_delta, date_global)
             )
         if guard_12:
             r1 = fraud_rules._dedup_against(r1, stored, fraud_rules.EVENT_PASSPORT)
-        acc = acc.unionByName(settle(r1, "REP_FRAUD_passport", "rep_fraud_passport"))
 
-        r2 = fraud_rules.rule2_contract(tx, cards, accounts, clients, date_global)
+        r2 = fraud_rules.rule2_contract(tx, *dims, date_global)
         if guard_12:
             r2 = fraud_rules._dedup_against(r2, stored, fraud_rules.EVENT_CONTRACT)
-        acc = acc.unionByName(settle(r2, "REP_FRAUD_contract", "rep_fraud_contract"))
 
-        rule3 = (fraud_rules.rule3_diff_cities_window if self.use_window_rules
-                 else fraud_rules.rule3_diff_cities_join)
-        r3 = rule3(tx_band, cards, accounts, clients, hist, stored.unionByName(acc), date_global)
-        acc = acc.unionByName(settle(r3, "REP_FRAUD_diff_cities", "rep_fraud_diff_cities"))
+        # Rules 3-4 dedup against the stored mart alone: the guard keeps
+        # only mart rows of the rule's own event type, and no rule emits
+        # another rule's type, so this run's earlier hits never match.
+        if self.use_window_rules:
+            r3 = fraud_rules.rule3_diff_cities_window(
+                tx_band, *dims, hist, stored, date_global, max_card_rows=max_card_rows)
+            r4 = fraud_rules.rule4_amount_guessing_window(
+                tx_band, *dims, stored, date_global, max_card_rows=max_card_rows)
+        else:
+            r3 = fraud_rules.rule3_diff_cities_join(tx_band, *dims, hist, stored, date_global)
+            r4 = fraud_rules.rule4_amount_guessing_join(tx_band, *dims, stored, date_global)
 
-        rule4 = (fraud_rules.rule4_amount_guessing_window if self.use_window_rules
-                 else fraud_rules.rule4_amount_guessing_join)
-        r4 = rule4(tx_band, cards, accounts, clients, stored.unionByName(acc), date_global)
-        acc = acc.unionByName(settle(r4, "REP_FRAUD_attempt_amount", "rep_fraud_attempt_amount"))
-
+        rules = [r1, r2, r3, r4]
+        if not self.incremental:
+            rules = [settle(df, audit_name, short) for df, (audit_name, short, _ev)
+                     in zip(rules, RULE_AUDIT)]
+        # REP_FRAUD's field order: the dedup's using-join puts
+        # (passport, event_dt) first in each rule's frame
+        hits = functools.reduce(DataFrame.unionByName, rules).select(
+            *schemas.REP_FRAUD.fieldNames())
         if self.incremental:
+            hits = hits.persist()
+            persisted.append(hits)
             with self._audited_stage("REP_FRAUD_rules", date_global):
-                self.wh.append_mart(acc, MART)
-            for audit_name, short, df in deferred:
-                counts[short] = df.count()  # cache-local: write materialized it
+                self.wh.append_mart(hits, MART)
+            # cache-local: the write materialized it. (An Observation
+            # metric on the write would save this job, but a lingering
+            # ObservationManager reference poisons later task-closure
+            # serialization on the shared session — SparkException: Task
+            # not serializable.)
+            per_type = dict(hits.groupBy("event_type").count().collect())
+            for audit_name, short, event_type in RULE_AUDIT:
+                counts[short] = per_type.get(event_type, 0)
                 log_meta(self.wh, audit_name, date_global, counts[short])
         else:
-            self.wh.append_mart(acc, MART)
+            self.wh.append_mart(hits, MART)
         flush_meta(self.wh)
         for df in persisted:
             df.unpersist()
         return counts
+
+    def _card_clients(self) -> DataFrame:
+        """The card -> client frame (``fraud_rules.card_clients``) as a
+        one-slice local frame, joined once per batch at its first rules
+        run: the seed dimensions never change within a run, so each
+        day's rules broadcast one small local relation instead of
+        three dimension scans."""
+        if self._card_client_df is None:
+            cc = fraud_rules.card_clients(
+                self.dims["cards"], self.dims["accounts"], self.dims["clients"])
+            self._card_client_df = local_rows_df(self.spark, cc.collect(), cc.schema)
+        return self._card_client_df

@@ -3,9 +3,14 @@
 Runs one analyst write cycle (MERGE, DELETE, UPDATE and one streamed
 drop, after the workload's untimed warm-up cycle) and one nightly day
 (after its warm-up day) through ``perfbench/workloads.py``, with no
-readers beside the writer. For every op it prints the wall time and each
+readers beside the writer. For every op it prints the wall time, how many
+code-generation compiles the op caused and their total time, and each
 Spark job the op submitted, with the job's id, name and duration, read
-from Spark's status store.
+from Spark's status store. Compiles are counted by
+``CodegenMetrics.METRIC_COMPILATION_TIME`` (every Janino compile: whole
+stages and generated projections alike; a cache hit compiles nothing)
+and timed by ``CodeGenerator.compileTime``, both read through py4j from
+the driver JVM, where local mode's executors compile too.
 
 Usage, from the repository root:
 
@@ -78,13 +83,34 @@ class JobLog:
         return out
 
 
+class Codegen:
+    """Running totals of the JVM's code-generation compiles: how many
+    (``CodegenMetrics.METRIC_COMPILATION_TIME``'s sample count) and how
+    long in all (``CodeGenerator.compileTime``, nanoseconds)."""
+
+    def __init__(self, spark):
+        jvm = spark.sparkContext._jvm
+        self.hist = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+            .METRIC_COMPILATION_TIME()
+        self.gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+            .CodeGenerator
+
+    def totals(self) -> tuple[int, float]:
+        """``(compiles, seconds)`` since the JVM started."""
+        return self.hist.getCount(), self.gen.compileTime() / 1e9
+
+
 def census_op(log: JobLog, label: str, fn) -> int:
     log.new_jobs()
+    codegen = Codegen(log.spark)
+    n0, s0 = codegen.totals()
     t = time.perf_counter()
     fn()
     wall = time.perf_counter() - t
     jobs = log.new_jobs()
-    print(f"{label}: {wall:.3f} s, {len(jobs)} jobs")
+    n1, s1 = codegen.totals()
+    print(f"{label}: {wall:.3f} s, {len(jobs)} jobs, "
+          f"{n1 - n0} codegen compiles ({s1 - s0:.3f} s)")
     for jid, name, secs in jobs:
         print(f"    job {jid:>5} {secs * 1000:8.0f} ms  {name}")
     return len(jobs)
