@@ -920,7 +920,10 @@ def main() -> None:
     spark = get_spark(app_name="fraud_etl_bench")
     qmap = queries_map()
 
-    names = [n for n in HEADLINE if n in qmap]
+    missing = [n for n in HEADLINE + WATCHLIST if n not in qmap]
+    if missing:
+        raise KeyError(f"bench names missing from the catalog: {missing}")
+    names = list(HEADLINE)
     # Warm the JVM so timings measure the PLANS, not one-time codegen/JIT
     # compilation: run every headline query shape once at the smallest SF
     # (the md5/higher-order-function/window codegen paths each cost ~1-2s

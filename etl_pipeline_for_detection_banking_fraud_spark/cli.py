@@ -9,7 +9,7 @@ is not a file, exits with status 2 before a Spark session starts.
 Usage:
     python -m etl_pipeline_for_detection_banking_fraud_spark.cli replay \
         --data FEED_DIR --warehouse WAREHOUSE_DIR --seed-dml SEED_DML_SQL \
-        [--archive DIR] [--join-rules] [--fixed-idempotency] [--incremental]
+        [--archive DIR] [--fixed-idempotency] [--incremental]
 
 --seed-dml defaults to the reference data's ddl_dml.sql.
 """
@@ -47,8 +47,6 @@ def main(argv: list[str] | None = None) -> int:
     rp.add_argument("--warehouse", required=True, help="warehouse root directory")
     rp.add_argument("--seed-dml", default="/root/reference/data/ddl_dml.sql")
     rp.add_argument("--archive", default=None, help="archive processed files here")
-    rp.add_argument("--join-rules", action="store_true",
-                    help="use the literal self-join rule formulations instead of windows")
     rp.add_argument("--fixed-idempotency", action="store_true",
                     help="dedup rules 1-2 against the mart too (fixes the reference's re-run double-insert)")
     rp.add_argument("--incremental", action="store_true",
@@ -70,7 +68,6 @@ def main(argv: list[str] | None = None) -> int:
     batch = DailyBatch(
         spark, args.warehouse, dims,
         archive_dir=args.archive,
-        use_window_rules=not args.join_rules,
         strict=not args.fixed_idempotency,
         incremental=args.incremental,
     )

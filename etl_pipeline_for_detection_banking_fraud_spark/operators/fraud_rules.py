@@ -6,15 +6,15 @@ the REP_FRAUD shape; sequencing/visibility semantics (the reference's
 single-transaction read-your-own-writes, EP3) live in pipeline.py.
 
 Two formulations of the self-join rules (3 and 4):
+- ``*_window``: the production path, the only one ``DailyBatch`` runs —
+  one pass over transactions, ``Window.partitionBy(card_num).orderBy(ts)``
+  with a range frame holding the trailing hour / 20 minutes. O(n log n)
+  per day, one shuffle on card_num, no pair blowup; this is the
+  formulation that survives 100 TB.
 - ``*_join``: literal translation of the reference SQL — a same-card
-  self-join with a time-band residual. Oracle-checkable, and what
-  Postgres itself executes. O(pairs-per-card) blowup on hot cards.
-- ``*_window``: the production path — one pass over transactions,
-  ``Window.partitionBy(card_num).orderBy(ts)`` with a range frame
-  holding the trailing hour / 20 minutes. O(n log n) per day, one
-  shuffle on card_num, no pair blowup; this is the formulation that
-  survives 100 TB. Both are tested equivalent on planted fixtures and
-  on the reference's own 3-day replay.
+  self-join with a time-band residual, O(pairs-per-card) on hot cards.
+  A test reference only: the rule and hot-card tests check the window
+  form against it, and the replay suites against the DuckDB oracle.
 
 Dimension sides are broadcast: they are key-bounded (cards per bank,
 terminals per bank), not data-volume-bounded, so they stay broadcastable
@@ -166,47 +166,6 @@ def _city_asof(tx: DataFrame, terminals_hist: DataFrame, alias: str,
         & ts_between_dates(F.col("transaction_date"), F.col(f"{alias}_from"), F.col(f"{alias}_to")),
         how,
     ).drop(f"{alias}_tid", f"{alias}_from", f"{alias}_to")
-
-
-def city_asof_pandas(tx: DataFrame, terminals_hist: DataFrame) -> DataFrame:
-    """Alternative J6 backend: per-terminal ``pd.merge_asof`` via
-    applyInPandas (the guide's escape hatch when the interval join can't
-    stay relational). Equivalent to _city_asof for non-deleted versions;
-    kept as a reference implementation of the Pandas-UDF path and tested
-    against the relational formulation.
-    """
-    import pandas as pd
-
-    hist = terminals_hist.select(
-        F.col("terminal_id").alias("t_tid"),
-        F.col("terminal_city").alias("c_city"),
-        F.col("effective_from").alias("t_from"),
-        F.col("effective_to").alias("t_to"),
-    )
-    joined_in = tx.join(hist, tx.terminal == F.col("t_tid"), "inner")
-
-    out_fields = [f for f in tx.schema.fields]
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in out_fields
-    ) + ", c_city string"
-
-    def pick_version(pdf: pd.DataFrame) -> pd.DataFrame:
-        # plain-Python comparison: the 9999-12-31 open-end sentinel
-        # overflows pandas' ns-resolution datetime64 (max year 2262)
-        def in_effect(ts, d_from, d_to):
-            ts = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-            lo = datetime.datetime.combine(d_from, datetime.time.min)
-            hi = datetime.datetime.combine(d_to, datetime.time.min)
-            return lo <= ts <= hi
-
-        keep = [
-            in_effect(ts, f, t)
-            for ts, f, t in zip(pdf["transaction_date"], pdf["t_from"], pdf["t_to"])
-        ]
-        cols = [f.name for f in out_fields] + ["c_city"]
-        return pdf.loc[keep, cols]
-
-    return joined_in.groupBy("terminal").applyInPandas(pick_version, schema=out_schema)
 
 
 def rule3_diff_cities_join(tx: DataFrame, cards: DataFrame, accounts: DataFrame,

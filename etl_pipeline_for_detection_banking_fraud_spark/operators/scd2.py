@@ -36,44 +36,6 @@ from ..functions.scalars import SCD2_OPEN_END_DATE
 
 ATTR_COLS = ["terminal_type", "terminal_city", "terminal_address"]
 KEY = "terminal_id"
-_SNAP_COLS = [KEY, *ATTR_COLS]
-
-
-def new_keys(snapshot: DataFrame, hist: DataFrame) -> DataFrame:
-    """Snapshot rows whose key has never been seen (incr_loading.py:14-25)."""
-    return snapshot.select(*_SNAP_COLS).join(hist, KEY, "left_anti")
-
-
-def deleted_rows(snapshot: DataFrame, hist: DataFrame) -> DataFrame:
-    """History rows (all versions) of keys absent from the snapshot
-    (incr_loading.py:29-41)."""
-    return hist.select(*_SNAP_COLS).join(snapshot, KEY, "left_anti")
-
-
-def updated_rows(snapshot: DataFrame, hist: DataFrame) -> DataFrame:
-    """Snapshot rows that differ from ANY history version, null-safely
-    (incr_loading.py:44-58). One output row per differing version —
-    duplicates intentionally preserved (see module docstring)."""
-    h = hist.select(F.col(KEY).alias("_h_key"), *[F.col(c).alias(f"_h_{c}") for c in ATTR_COLS])
-    changed = None
-    for c in ATTR_COLS:
-        neq = ~F.col(c).eqNullSafe(F.col(f"_h_{c}"))
-        changed = neq if changed is None else (changed | neq)
-    return (
-        snapshot.select(*_SNAP_COLS)
-        .join(h, F.col(KEY) == F.col("_h_key"))
-        .where(changed)
-        .select(*_SNAP_COLS)
-    )
-
-
-def _as_versions(rows: DataFrame, effective_from: datetime.date, deleted: bool) -> DataFrame:
-    return rows.select(
-        *_SNAP_COLS,
-        F.lit(effective_from).alias("effective_from"),
-        F.lit(SCD2_OPEN_END_DATE).alias("effective_to"),
-        F.lit(deleted).alias("deleted_flg"),
-    )
 
 
 def apply_increment(hist: DataFrame, snapshot: DataFrame, date_global: datetime.date) -> DataFrame:
@@ -89,10 +51,10 @@ def apply_increment(hist: DataFrame, snapshot: DataFrame, date_global: datetime.
     via a window over the join output, and every output row — adjusted
     existing version, appended new version, tombstone — emitted from one
     conditional-array explode. 3 exchanges total (two join sides + the
-    window's coalesced key) vs. the 12 of the increment-per-increment
-    formulation (kept below as `apply_increment_multipass`, the
-    differential oracle); at 100 TB the dim is key-bounded either way,
-    but the collapsed plan also scans each input once instead of 3-4x.
+    window's coalesced key), and each input is scanned once. The
+    increment-per-increment SQL (new / updated / deleted sets, then the
+    closes and inserts) is the DuckDB oracle's (tests/ref_oracle.py),
+    which the SCD2 tests compare against.
     """
     s = snapshot.select(
         F.col(KEY).alias("_s_key"), *[F.col(c).alias(f"_s_{c}") for c in ATTR_COLS]
@@ -155,43 +117,4 @@ def apply_increment(hist: DataFrame, snapshot: DataFrame, date_global: datetime.
     return (
         j.select(F.explode(F.filter(outputs, lambda x: x.isNotNull())).alias("_r"))
         .select("_r.*")
-    )
-
-
-def apply_increment_multipass(hist: DataFrame, snapshot: DataFrame,
-                              date_global: datetime.date) -> DataFrame:
-    """The increment-per-increment formulation (3 joins + broadcast close
-    probe, 12 exchanges). Kept as the readable reference implementation
-    and the differential oracle for `apply_increment`."""
-    # materialize both inputs once: the three increments each probe
-    # snapshot and history (3x/4x reuse — the reference materializes the
-    # same intermediates as tmp tables, incr_loading.py:14-58). Without
-    # this, a derived snapshot (e.g. an aggregation) re-executes its
-    # whole subtree per increment.
-    snapshot = snapshot.persist()
-    hist = hist.persist()
-    new = new_keys(snapshot, hist)
-    upd = updated_rows(snapshot, hist)
-    dele = deleted_rows(snapshot, hist)
-
-    close_ids = (
-        upd.select(KEY).union(dele.select(KEY)).distinct().withColumn("_close_hit", F.lit(True))
-    )
-    adjusted = (
-        hist.join(F.broadcast(close_ids), KEY, "left")
-        .withColumn(
-            "effective_to",
-            F.when(
-                F.col("_close_hit").isNotNull()
-                & (F.col("effective_to") == F.lit(SCD2_OPEN_END_DATE)),
-                F.date_sub(F.lit(date_global), 1),
-            ).otherwise(F.col("effective_to")),
-        )
-        .drop("_close_hit")
-    )
-    return (
-        adjusted
-        .unionByName(_as_versions(new, date_global, deleted=False))
-        .unionByName(_as_versions(upd, date_global, deleted=False))
-        .unionByName(_as_versions(dele, date_global, deleted=True))
     )

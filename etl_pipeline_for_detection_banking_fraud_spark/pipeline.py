@@ -14,7 +14,10 @@ Re-implements the reference's linear main.py flow (EP1-EP3, SURVEY §3):
    visibility changes nothing here: each dedup keeps only mart rows of
    its own rule's event type, and no rule emits another rule's type, so
    every rule anti-joins against the stored mart alone. The four rule
-   frames become one union, appended once at the end.
+   frames become one union, appended once at the end. Each rule runs in
+   one formulation (``operators/fraud_rules.py``; rules 3-4 as trailing
+   range-frame windows); the literal ``*_join`` forms and the DuckDB
+   oracle (tests/ref_oracle.py) are test references only.
 5. audit rows into META_LOADING throughout; processed files archived.
 
 Faithful-by-default: rules 1-2 have no idempotency guard in the
@@ -57,18 +60,23 @@ RULE_AUDIT = (
 class DailyBatch:
     def __init__(self, spark: SparkSession, warehouse_root: str,
                  seed_dims: dict[str, DataFrame], archive_dir: str | None = None,
-                 use_window_rules: bool = True, strict: bool = True,
-                 incremental: bool = False, lookback_days: int = 1,
-                 atomic: bool = False, cache_faithful_scans: bool = True):
+                 strict: bool = True, incremental: bool = False,
+                 atomic: bool = False):
         """`incremental=False` (default) is the parity mode: rules re-scan the
         full fact history every day, exactly like the reference
         (loading_rep_fraud.py:24,52 — no date filter, rules 1-2 re-insert all
-        historical hits daily).  `incremental=True` is the scale mode: the
-        fact read is partition-pruned to the current day (rules 1-2) or a
-        `lookback_days` band (rules 3-4, whose time-window pairs can straddle
-        midnight), and rules 1-2 gain the NOT-EXISTS idempotency guard so the
-        lookback overlap cannot re-insert.  Daily cost becomes O(day), not
-        O(history).
+        historical hits daily); the day's fact scan and mart read are
+        persisted once and shared by the four rules.  `incremental=True` is
+        the scale mode: the fact read is partition-pruned to the current day
+        (rules 1-2) or a `lookback_days` band (rules 3-4, whose time-window
+        pairs can straddle midnight), and rules 1-2 gain the NOT-EXISTS
+        idempotency guard so the lookback overlap cannot re-insert.  Daily
+        cost becomes O(day), not O(history).
+
+        Rules 3 and 4 run in their window formulation
+        (``fraud_rules.rule3_diff_cities_window`` and
+        ``rule4_amount_guessing_window``), each planning its hot-card
+        branch only when the band's busiest card can cross a threshold.
 
         `atomic=True` runs each day inside ONE warehouse commit-log
         transaction (the reference runs all inserts in one Postgres
@@ -85,17 +93,17 @@ class DailyBatch:
         self.wh = Warehouse(spark, warehouse_root)
         self.dims = seed_dims  # cards / accounts / clients
         self.archive_dir = archive_dir
-        self.use_window_rules = use_window_rules
         self.strict = strict
         self.incremental = incremental
-        self.lookback_days = lookback_days
         self.atomic = atomic
-        self.cache_faithful_scans = cache_faithful_scans
         self._card_client_df: DataFrame | None = None
 
     # Widest pair window any rule needs from the previous day: rule 3's
     # trailing 3599s frame (rule 4's decreasing triples span <1200s).
     RULE_BAND_SECONDS = 3599
+    # Days of fact partitions before the current one that incremental
+    # rules 3-4 read: the RULE_BAND_SECONDS band fits in one day.
+    lookback_days = 1
 
     def optimize_facts(self, zorder_cards: bool = False) -> None:
         """File maintenance for the fact table (atomic/tracked mode):
@@ -211,11 +219,13 @@ class DailyBatch:
             )
             if self.incremental:
                 # Incremental rule 1 needs today's blacklist delta for the
-                # retroactive term; persist the tiny delta so the anti-join
-                # doesn't re-run after the append below changes the table
-                # (the append itself materializes the cache — no eager
-                # count needed).
-                bl_new = bl_new.persist()
+                # retroactive term, computed BEFORE the append below adds
+                # it to the table. The delta is a few rows: hold them as a
+                # local frame. (A persisted frame is not enough: a write to
+                # a table's directory re-caches every cached plan that
+                # reads it, so the anti-join would re-run against the
+                # appended table and return no rows.)
+                bl_new = local_rows_df(self.spark, bl_new.collect(), bl_new.schema)
             self.wh.append(bl_new, FACT_BL)
         with self._audited_stage(FACT_TX, date_global):
             self.wh.append_transactions(tx, FACT_TX)
@@ -229,8 +239,6 @@ class DailyBatch:
         # -- EP3: fraud rules (loading_rep_fraud.py) --------------------------
         counts.update(self.run_fraud_rules(
             date_global, bl_delta=bl_new if self.incremental else None))
-        if self.incremental:
-            bl_new.unpersist()
 
         self.clear_stg_tables(date_global)
         counts["date_global"] = date_global
@@ -298,7 +306,7 @@ class DailyBatch:
 
         counts: dict[str, int] = {}
         persisted = []
-        if not self.incremental and self.cache_faithful_scans:
+        if not self.incremental:
             # Faithful mode derives every rule from the SAME full-history
             # fact scan and full mart (the reference's posture); each
             # rule's per-stage job would otherwise re-run both scans, so
@@ -307,11 +315,6 @@ class DailyBatch:
             # reference-parity results — and turns the faithful mode's
             # history cost from 4x scans into one scan + cache reads
             # (MEMORY_AND_DISK: long histories spill instead of OOM).
-            # Trade-off knob: the cache materializes FULL rows, while
-            # the re-scans are column-pruned parquet reads — on a slow
-            # store the cache wins, on fast local parquet the pruned
-            # re-scans can; `cache_faithful_scans=False` keeps the
-            # re-scan behavior.
             tx = tx_day = tx_band = tx.persist()
             stored = stored.persist()
             persisted.extend([tx, stored])
@@ -338,12 +341,10 @@ class DailyBatch:
         # routing measure of rules 3-4 from above; a rule whose threshold
         # it does not exceed plans only its cold path. (A top-1 sort runs
         # one job fewer than a global max over the per-card counts.)
-        max_card_rows = None
-        if self.use_window_rules:
-            with self._audited_stage("REP_FRAUD_rules", date_global):
-                busiest = tx_band.groupBy("card_num").count() \
-                    .orderBy(F.desc("count")).first()
-            max_card_rows = busiest["count"] if busiest else 0
+        with self._audited_stage("REP_FRAUD_rules", date_global):
+            busiest = tx_band.groupBy("card_num").count() \
+                .orderBy(F.desc("count")).first()
+        max_card_rows = busiest["count"] if busiest else 0
 
         guard_12 = (not self.strict) or self.incremental
         r1 = fraud_rules.rule1_passport(tx, *dims, bl, date_global)
@@ -376,14 +377,10 @@ class DailyBatch:
         # Rules 3-4 dedup against the stored mart alone: the guard keeps
         # only mart rows of the rule's own event type, and no rule emits
         # another rule's type, so this run's earlier hits never match.
-        if self.use_window_rules:
-            r3 = fraud_rules.rule3_diff_cities_window(
-                tx_band, *dims, hist, stored, date_global, max_card_rows=max_card_rows)
-            r4 = fraud_rules.rule4_amount_guessing_window(
-                tx_band, *dims, stored, date_global, max_card_rows=max_card_rows)
-        else:
-            r3 = fraud_rules.rule3_diff_cities_join(tx_band, *dims, hist, stored, date_global)
-            r4 = fraud_rules.rule4_amount_guessing_join(tx_band, *dims, stored, date_global)
+        r3 = fraud_rules.rule3_diff_cities_window(
+            tx_band, *dims, hist, stored, date_global, max_card_rows=max_card_rows)
+        r4 = fraud_rules.rule4_amount_guessing_window(
+            tx_band, *dims, stored, date_global, max_card_rows=max_card_rows)
 
         rules = [r1, r2, r3, r4]
         if not self.incremental:

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_for_detection_banking_fraud_spark.plans import CATALOG
+from etl_pipeline_for_detection_banking_fraud_spark.plans import CATALOG, queries_map
 
 QD = {q.name: q for q in CATALOG}
 
@@ -421,3 +421,33 @@ def test_tpch_q6_filters_pushed_no_shuffle(spark, sf01):
     assert rs[1:] and all(
         "l_orderkey" not in seg[:300] and "l_returnflag" not in seg[:300]
         for seg in rs[1:])  # column pruning: 3 columns, not the table
+
+
+# -- entry points ------------------------------------------------------------
+# bench.py and __spark_entry__.py name catalog entries; a name the catalog
+# lacks must fail here, not vanish from a benchmark or an entry() call.
+
+def test_bench_and_entry_names_resolve(monkeypatch):
+    import bench
+    import __spark_entry__ as entry_mod
+
+    qmap = queries_map()
+    missing = [n for n in bench.HEADLINE + bench.WATCHLIST if n not in qmap]
+    assert not missing, f"bench names missing from the catalog: {missing}"
+
+    looked_up: list[str] = []
+
+    class Recording(dict):
+        def __getitem__(self, name):
+            looked_up.append(name)
+            return lambda spark, sf_dir: name
+
+    monkeypatch.setattr(entry_mod, "queries_map", Recording)
+    assert entry_mod.entry(None) == "decreasing_triple"
+    assert looked_up and all(n in qmap for n in looked_up)
+
+
+def test_oracle_sql_covers_every_catalog_entry_with_sql():
+    import __spark_entry__ as entry_mod
+
+    assert entry_mod.oracle_sql() == {q.name: q.sql for q in CATALOG if q.sql is not None}

@@ -62,7 +62,7 @@ def replay_with_oracle(spark, feed_dir, seed_dml, tmp_path_factory):
     oracle; returns (batch, duckdb connection)."""
     root = str(tmp_path_factory.mktemp("wh"))
     dims = load_seed_dims(spark, seed_dml)
-    batch = DailyBatch(spark, root, dims, use_window_rules=True)
+    batch = DailyBatch(spark, root, dims)
 
     con = ref_oracle.make_oracle()
     ref_oracle.load_dims(

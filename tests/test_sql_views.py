@@ -1,4 +1,4 @@
-"""SQL API surface + Pandas as-of backend equivalence."""
+"""SQL API surface + the rules' as-of terminal join at version boundaries."""
 
 from __future__ import annotations
 
@@ -52,8 +52,4 @@ def test_pandas_asof_matches_relational_asof(spark):
         (r.transaction_id, r.c_city)
         for r in fr._city_asof(tx, hist, "c").select("transaction_id", "c_city").collect()
     }
-    pnd = {
-        (r.transaction_id, r.c_city)
-        for r in fr.city_asof_pandas(tx, hist).select("transaction_id", "c_city").collect()
-    }
-    assert rel == pnd == {("t0", "CityA"), ("t2", "CityB")}
+    assert rel == {("t0", "CityA"), ("t2", "CityB")}

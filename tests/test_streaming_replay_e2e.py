@@ -84,7 +84,7 @@ def check_streaming_replay(spark, feed_dir, seed_dml, tmp_path, day_rows,
     # Rules run in the reference's faithful mode over the STREAMED facts;
     # blacklist/terminals keep their batch ingestion (the reference has
     # no streaming analogue for the xlsx feeds).
-    batch = DailyBatch(spark, root, dims, use_window_rules=True)
+    batch = DailyBatch(spark, root, dims)
 
     for day, date_global, n_rows in zip(DAYS, DATES, day_rows):
         src = os.path.join(feed_dir, f"transactions_{day}.txt")
