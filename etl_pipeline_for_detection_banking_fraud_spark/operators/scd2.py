@@ -3,8 +3,10 @@
 Re-implements the reference's terminal-history increment + apply
 (reference: py_scripts/incr_loading.py:13-129, SURVEY §2 J3/F6/J7/L4)
 without in-place UPDATEs: parquet is immutable, so the new dimension
-state is computed as one declarative plan and swapped in atomically
-(Warehouse.rewrite). On Delta/Iceberg the same increments feed a MERGE.
+state is computed as one declarative plan and written as a replace of
+the table's file set (Warehouse.rewrite), in the same commit-log entry
+as the rest of an atomic day. On Delta/Iceberg the same increments feed
+a MERGE.
 
 Faithfully reproduced reference quirks (golden-tested):
 - the updated-set join compares the snapshot against ALL history

@@ -81,12 +81,10 @@ class DailyBatch:
         `atomic=True` runs each day inside ONE warehouse commit-log
         transaction (the reference runs all inserts in one Postgres
         transaction — loading_rep_fraud.py:135 / comm_funcs.py:18): the
-        fact appends, mart append and every audit row become visible
-        together or not at all, so a crash mid-day leaves nothing
-        visible and a straight re-run produces zero duplicates. The SCD2
-        dim rewrite stays on its versioned-swap path (already atomic,
-        and re-applying an already-applied increment derives an empty
-        delta — re-runs converge). ERROR audit rows commit in their own
+        fact appends, the SCD2 dimension's replace, the mart append and
+        every audit row become visible together or not at all, so a
+        crash mid-day leaves every table as it was and a straight re-run
+        produces zero duplicates. ERROR audit rows commit in their own
         independent transaction so the failure trail survives the
         abort."""
         self.spark = spark

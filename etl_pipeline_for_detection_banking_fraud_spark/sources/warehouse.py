@@ -3,15 +3,13 @@
 The reference's warehouse is a Postgres schema; this engine's is a
 directory of parquet tables:
 
-- append tables (facts, report mart, audit): flat directory,
-  ``mode=append`` writes. DWH_FACT_TRANSACTIONS is hive-partitioned by
-  transaction day so per-day predicates prune partitions at 100 TB.
-- rewrite tables (the SCD2 dimension): versioned subdirectories
-  ``v=N/`` — Spark cannot overwrite a path it is currently reading, and
-  version-swap gives atomic replace + history. On a production object
-  store you would use Delta/Iceberg for this (same code shape, MERGE
-  instead of union-rewrite); the jars are not in this image, so the
-  versioned-dir backend keeps the engine dependency-free.
+- append tables (facts, report mart, audit): each commit adds files.
+  DWH_FACT_TRANSACTIONS and REP_FRAUD are partitioned by day
+  (``days()`` of their timestamp) so per-day predicates prune
+  partitions at 100 TB.
+- the SCD2 dimension is rewritten whole each day (``rewrite``): one
+  ``replace`` of its file set in the day's commit entry, next to the
+  other tables' appends — the Delta shape of an overwrite.
 
 Atomic multi-table transactions (the exactly-once path)
 -------------------------------------------------------
@@ -29,8 +27,9 @@ pure Python because those jars aren't in this image. Properties:
   them) — this closes the streaming sink's crash-between-append-and-
   marker double-append window (at-least-once -> exactly-once replay).
 - read-your-own-writes: ``read()`` on the warehouse that holds the open
-  transaction also sees its pending files — the pipeline's
-  L5 visibility (rules reading facts appended earlier in the run) works
+  transaction also sees its pending files (only those, for a table the
+  transaction replaces) — the pipeline's L5 visibility (rules reading
+  facts appended and the dimension rewritten earlier in the run) works
   unchanged inside a transaction.
 - once a table has a commit-log entry it is TRACKED: reads resolve
   through the log only (by-name file listing with ``basePath`` so hive
@@ -118,14 +117,19 @@ class ConstraintViolation(RuntimeError):
 
 
 class Transaction:
-    """Pending multi-table append set; see module docstring. Created via
-    ``Warehouse.begin()`` / ``Warehouse.transaction()``."""
+    """Pending multi-table appends and replaces; see module docstring.
+    Created via ``Warehouse.begin()`` / ``Warehouse.transaction()``."""
 
     def __init__(self, wh: "Warehouse"):
         self.wh = wh
         self.txnid = uuid.uuid4().hex[:12]
         self.pending: dict[str, list[str]] = {}  # table -> relpaths
-        self.replace = False  # True: commit entry REPLACES the file set
+        # tables whose file set this commit REPLACES: their pending
+        # files become the whole table. Every other pending table is
+        # appended to (a CDC merge's change-feed sidecar, the facts of
+        # a day that also rewrites its SCD2 dimension). Appends commute,
+        # so only these tables take part in replace conflict detection.
+        self.replaced: set[str] = set()
         # for replace entries: the highest log seq included in the file
         # set this replace was computed FROM. Commit detects any
         # intervening entry touching the same tables and raises
@@ -141,12 +145,6 @@ class Transaction:
         # raw missing-file error. merge_table keeps old files readable
         # and leaves this False.
         self.vacuum = False
-        # tables that stay APPENDS inside a replace entry (e.g. a CDC
-        # merge's change-feed sidecar: the merged table is replaced,
-        # the feed is append-only — one atomic entry, two ops). Appends
-        # commute, so these tables are excluded from replace conflict
-        # detection. Ignored when ``replace`` is False.
-        self.append_only: set[str] = set()
         # tables whose replace result is CONTENT-INDEPENDENT of rows
         # appended after the base snapshot (compact / cluster / zorder
         # / fold_dv: they rewrite a fixed READ SET of files; files a
@@ -399,9 +397,8 @@ class Transaction:
             raise
         table_dir = self.wh._path(table)
         files = self.pending.setdefault(table, [])
-        if not files and self.wh._manifest_files(table) is None and (
-            not self.replace or table in self.append_only
-        ):
+        if not files and table not in self.replaced and \
+                self.wh._manifest_files(table) is None:
             # first transactional write to a legacy table: adopt its
             # current files so they stay visible once the table flips to
             # commit-log reads
@@ -467,10 +464,10 @@ class Transaction:
     def _file_schema_entry(self) -> dict[str, list[str]]:
         """The commit entry's ``file_schema`` channel: per table, the
         schemas of its data files, so reads plan against the log and
-        never open a footer. An ADD entry (or a replace's append-only
-        table) carries only schemas the table has not recorded yet, so
-        a steady-state commit carries none; replay unions them in. A
-        REPLACE carries the table's full list when it changes it: a
+        never open a footer. An appended table carries only schemas it
+        has not recorded yet, so a steady-state commit carries none;
+        replay unions them in. A replaced table carries its full list
+        when it changes it: a
         rewrite of every file resets the list to what it wrote. Files
         the log tracks without a recorded schema (adopted legacy files,
         logs older than this channel) are read from their footers
@@ -491,7 +488,7 @@ class Transaction:
             else:
                 rec_base = list(rec)
             own = self._own_schemas.get(t, [])
-            if self.replace and t not in self.append_only:
+            if t in self.replaced:
                 rewrote_all = all(os.path.basename(r).startswith(mine)
                                   for r in files)
                 full = list(dict.fromkeys(
@@ -598,14 +595,13 @@ class Transaction:
             os.makedirs(log_dir, exist_ok=True)
             entry = {
                 "txn": self.txnid,
-                "op": "replace" if self.replace else "add",
+                "op": "replace" if self.replaced else "add",
                 "ts": time.time(),  # wall clock for TIMESTAMP AS OF
                 "tables": self.pending,
             }
-            if self.replace:
-                appends = sorted(self.append_only & set(self.pending))
-                if appends:
-                    entry["append_tables"] = appends
+            appends = sorted(set(self.pending) - self.replaced)
+            if self.replaced and appends:
+                entry["append_tables"] = appends
             if self.stats:
                 entry["stats"] = self.stats
             if self.partition_by:
@@ -687,7 +683,7 @@ class Transaction:
         any intervening entry updating (or dropping) the same table's
         schema — re-committing a payload computed from the older
         declaration would silently drop the concurrent column."""
-        if self.base_seq is None or not (self.replace
+        if self.base_seq is None or not (self.replaced
                                          or self.schema_updates):
             return
         horizon = self.wh.expire_horizon()
@@ -713,13 +709,12 @@ class Transaction:
                 continue
             clash = set()
             absorbable: set[str] = set()
-            if self.replace:
-                repl = set(self.pending) - self.append_only
-                # append-only tables commute and never conflict
-                touched = set(other.get("tables", {})) & repl
+            if self.replaced:
+                # appended tables commute and never conflict
+                touched = set(other.get("tables", {})) & self.replaced
                 # a concurrent DROP of a replaced table: committing the
                 # replace would silently resurrect it
-                touched |= set(other.get("drop_tables", [])) & repl
+                touched |= set(other.get("drop_tables", [])) & self.replaced
                 if touched and self.absorb_appends:
                     absorb = {t.lower() for t in self.absorb_appends}
                     other_appends = (
@@ -2272,7 +2267,7 @@ class Warehouse:
             df = self._dv_split_read(_build, table, dv_map, covered)
             part_cols = self._rewrite_part_cols(table, df)
             txn = Transaction(self)
-            txn.replace = True
+            txn.replaced = {table}
             txn.base_seq = base_seq
             # fold rewrites a FIXED read set (the dv-covered files):
             # concurrent appends are file-disjoint and absorbed at
@@ -2617,8 +2612,9 @@ class Warehouse:
             sjs = memo[t]
         txn = self._active_txn
         if at is None and txn is not None and not txn._done:
-            sjs = list(dict.fromkeys(
-                list(sjs) + txn._own_schemas.get(t, [])))
+            own = txn._own_schemas.get(t, [])
+            sjs = list(own) if t in txn.replaced else \
+                list(dict.fromkeys(list(sjs) + own))
         return sjs
 
     def _read_schema(self, table: str, at: int | None = None
@@ -3556,6 +3552,18 @@ class Warehouse:
             return []
         return t.pending.get(table.lower(), [])
 
+    def _visible_files(self, table: str
+                       ) -> tuple[list[str] | None, list[str]]:
+        """(committed relpaths, or None for a table the log does not
+        track; the open transaction's pending relpaths), as a read on
+        this warehouse sees them. A table the open transaction replaces
+        shows no committed files: its pending files are its whole file
+        set."""
+        t = self._active_txn
+        if t is not None and not t._done and table.lower() in t.replaced:
+            return [], self._pending_files(table)
+        return self._manifest_files(table), self._pending_files(table)
+
     def table_files(self, table: str) -> DataFrame:
         """Iceberg ``db.table$files``-style METADATA relation: one row
         per live manifest file — relpath, hive partition values (JSON),
@@ -3691,7 +3699,7 @@ class Warehouse:
             # concurrent clone (or any other commit birthing dst)
             # between our existence check and the commit raises
             # CommitConflict instead of double-appending every relpath
-            txn.replace = True
+            txn.replaced = {dst}
             txn.base_seq = base_seq
             txn.pending[dst] = list(mf)
             st = self._manifest_stats(src, at=base_seq or None)
@@ -3822,16 +3830,19 @@ class Warehouse:
         return removed
 
     def exists(self, table: str) -> bool:
-        """True iff the table directory holds actual DATA files.
+        """True iff the table holds actual DATA files.
 
-        A partitioned append of an EMPTY DataFrame writes only a
-        _SUCCESS marker (no partition dirs, no part files) — Spark then
-        fails schema inference on the read. Such a table must read as
-        empty-typed, so marker/hidden files don't count; one level of
-        subdirectories covers the ``dt=``/``v=N`` layouts."""
-        mf = self._manifest_files(table)
-        if mf is not None or self._pending_files(table):
-            return bool(mf) or bool(self._pending_files(table))
+        A tracked table counts the files the log commits plus the open
+        transaction's pending ones (only the pending ones when that
+        transaction replaces the table). An untracked directory counts
+        its data files: a partitioned append of an EMPTY DataFrame
+        writes only a _SUCCESS marker (no partition dirs, no part
+        files) and Spark then fails schema inference on the read, so
+        marker/hidden files don't count; one level of subdirectories
+        covers a hive-partitioned layout."""
+        mf, pend = self._visible_files(table)
+        if mf is not None or pend:
+            return bool(mf) or bool(pend)
         p = self._path(table)
         if not os.path.isdir(p):
             return False
@@ -3920,17 +3931,8 @@ class Warehouse:
             if schema is None:
                 raise FileNotFoundError(f"table {table} absent and no schema given")
             return _empty_df(self.spark, schema)
-        p = self._path(table)
-        versions = _versions(p)
-        mf = self._manifest_files(table)
-        pend = self._pending_files(table)
-        # untracked layouts only: tracked reads plan from the log
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        if versions:
-            df = reader.parquet(os.path.join(p, f"v={versions[-1]}"))
-        elif mf is not None or pend:
+        mf, pend = self._visible_files(table)
+        if mf is not None or pend:
             # tracked table: read exactly the committed (+ own-txn
             # pending) files by name; basePath keeps hive partition
             # columns (dt=...) parsing and pruning
@@ -3968,7 +3970,11 @@ class Warehouse:
             else:
                 df = _build(rels)
         else:
-            df = reader.parquet(p)
+            # untracked directory: Spark's footer inference
+            reader = self.spark.read
+            if merge_schema:
+                reader = reader.option("mergeSchema", "true")
+            df = reader.parquet(self._path(table))
         if schema is not None:
             df = df.select(*[f.name for f in schema.fields])
         return df
@@ -4002,17 +4008,38 @@ class Warehouse:
         return {f.name.lower() for f in schema.fields
                 if isinstance(f.dataType, T.StructType)}
 
-    # -- versioned rewrite tables -------------------------------------------
+    # -- replace writes -----------------------------------------------------
 
-    def rewrite(self, df: DataFrame, table: str, keep_versions: int = 3) -> None:
-        """Atomically replace a table's contents (for union-rewritten dims)."""
-        p = self._path(table)
-        os.makedirs(p, exist_ok=True)
-        versions = _versions(p)
-        nxt = (versions[-1] + 1) if versions else 1
-        df.write.mode("overwrite").parquet(os.path.join(p, f"v={nxt}"))
-        for old in versions[:-keep_versions + 1] if keep_versions > 1 else versions:
-            shutil.rmtree(os.path.join(p, f"v={old}"), ignore_errors=True)
+    def rewrite(self, df: DataFrame, table: str,
+                partition_by: list[str] | None = None) -> None:
+        """Replace the table's whole file set with ``df`` (the SCD2
+        dimension's daily union-rewrite, SQL ``INSERT OVERWRITE``).
+        Inside an open transaction the replace rides that transaction's
+        one entry, so it commits or vanishes with everything else in
+        it; otherwise it commits as a one-entry transaction of its own.
+        Either way, a commit touching the table between this call and
+        the commit raises ``CommitConflict``. ``partition_by`` is
+        ``append``'s.
+
+        A logical replace, like ``merge_table``: the superseded files
+        stay on disk and ``read_at`` still reads them; ``expire_log``
+        then ``vacuum_orphans`` reclaims them once no retained snapshot
+        refers to them."""
+        table = table.lower()
+        txn = self._active_txn
+        scope = (contextlib.nullcontext(txn)
+                 if txn is not None and not txn._done
+                 else self.transaction())
+        with scope as txn:
+            if txn.base_seq is None:
+                txn.base_seq = self._latest_seq()
+            # what this transaction staged for the table before is
+            # replaced too (its files are orphans for vacuum_orphans)
+            for staged in (txn.pending, txn.stats, txn.partition_by,
+                           txn._own_schemas):
+                staged.pop(table, None)
+            txn.replaced.add(table)
+            txn.append(df, table, partition_by)
 
     def compact(self, table: str, target_files_per_partition: int = 1,
                 where: dict | None = None) -> None:
@@ -4033,18 +4060,11 @@ class Warehouse:
         last append, not the table. Requires a commit-log tracked
         table (the manifest is what makes a partial rewrite safe).
 
-        Append tables only: a versioned-rewrite table (v=N subdirs) is
-        refused — read.parquet(root) would merge every version into one
-        duplicated table. The two-rename swap below is atomic enough for
-        a local/HDFS filesystem but NOT for object stores (no atomic
-        rename); on S3-class storage route compaction through
-        Delta/Iceberg OPTIMIZE instead.
+        An untracked table is compacted by a two-rename directory swap:
+        atomic enough for a local/HDFS filesystem but NOT for object
+        stores (no atomic rename); on S3-class storage route compaction
+        through Delta/Iceberg OPTIMIZE instead.
         """
-        if _versions(self._path(table)):
-            raise ValueError(
-                f"compact() is for append tables; {table} is a versioned "
-                "rewrite table — its rewrite already replaces whole files"
-            )
         mf = self._manifest_files(table)
         if mf is not None:
             # commit-log table: write the compacted file set as a new
@@ -4103,7 +4123,7 @@ class Warehouse:
                                              selected)
                 part_cols = self._rewrite_part_cols(table, df)
                 txn = Transaction(self)
-                txn.replace = True
+                txn.replaced = {table.lower()}
                 txn.base_seq = base_seq
                 # compaction rewrites the files SELECTED at base_seq:
                 # files a concurrent append adds are disjoint by
@@ -4329,7 +4349,7 @@ class Warehouse:
                 "*", *[k.alias(n) for n, k in zip(kc, keys)]
             )
             txn = Transaction(self)
-            txn.replace = True
+            txn.replaced = {table.lower()}
             txn.base_seq = base_seq
             # same file-disjointness argument as compact(): the
             # clustering rewrite absorbs concurrent appends at commit
@@ -4470,7 +4490,7 @@ class Warehouse:
         stats = self._manifest_stats(table, at=seq)
         state_at = self._replay_state(at=seq)
         txn = Transaction(self)
-        txn.replace = True
+        txn.replaced = {table}
         txn.base_seq = self._latest_seq()
         txn.pending = {table: list(files)}
         if stats:
@@ -4543,11 +4563,10 @@ class Warehouse:
             )
             part_cols = self._rewrite_part_cols(table, current)
             txn = Transaction(self)
-            txn.replace = True
+            txn.replaced = {table.lower()}
             txn.base_seq = base_seq
             txn.append(merged, table, partition_by=part_cols or None)
             if sidecar:
-                txn.append_only.add(sidecar)  # the feed stays append-only
                 feed = cdc.snapshot_diff(current, merged, [key]).withColumn(
                     "_txn", F.lit(txn.txnid)
                 )
@@ -4907,7 +4926,7 @@ class Warehouse:
                                 [os.path.basename(r) for r in touched])))
                     part_cols = self._rewrite_part_cols(table, newest)
                     txn = Transaction(self)
-                    txn.replace = True
+                    txn.replaced = {table.lower()}
                     txn.base_seq = base_seq
                     if evolved_json is not None:
                         # declare the evolved schema IN THIS commit: the
@@ -4954,7 +4973,6 @@ class Warehouse:
                             txn.dv[table] = survivors
                             self._carry_dv_rows(table, txn, survivors)
                     if sidecar:
-                        txn.append_only.add(sidecar)
                         feeds = []
                         if plan.update_tags:
                             upd = tagged.where(act.isin(plan.update_tags))
@@ -5181,7 +5199,7 @@ class Warehouse:
                 )
                 eff_mode = "rewrite"
             txn = Transaction(self)
-            txn.replace = True
+            txn.replaced = {table.lower()}
             txn.base_seq = base_seq
             if eff_mode == "dv":
                 dv_rel = self._write_dv_file(table, doomed, txn)
@@ -5204,7 +5222,6 @@ class Warehouse:
                     txn.dv[table] = survivors
                     self._carry_dv_rows(table, txn, survivors)
             if sidecar:
-                txn.append_only.add(sidecar)
                 feed = doomed.drop("_src").withColumn(
                     "change_type", F.lit("delete")
                 ).withColumn("_txn", F.lit(txn.txnid))
@@ -5327,7 +5344,7 @@ class Warehouse:
                 eff_mode = "rewrite"
             part_cols = self._rewrite_part_cols(table, live)
             txn = Transaction(self)
-            txn.replace = True
+            txn.replaced = {table.lower()}
             txn.base_seq = base_seq
             if eff_mode == "dv":
                 dv_rel = self._write_dv_file(table, pre, txn)
@@ -5359,7 +5376,6 @@ class Warehouse:
                     txn.dv[table] = survivors
                     self._carry_dv_rows(table, txn, survivors)
             if sidecar:
-                txn.append_only.add(sidecar)
                 feed = pre.drop("_src").withColumn(
                     "change_type", F.lit("update_preimage")
                 ).unionByName(
@@ -5384,110 +5400,42 @@ class Warehouse:
 
     def append_transactions(self, df: DataFrame, table: str = "dwh_fact_transactions") -> None:
         """Fact append under HIDDEN partitioning: ``days(
-        transaction_date)`` (r12 verdict item #3) — the engine derives
-        the day path key itself (Iceberg ``days()`` transform) instead
-        of the caller materializing a ``dt`` column, and
-        ``read_transactions``'s since/until band prunes the derived
-        directories through the base-column bounds. Back-compat: a
-        warehouse whose fact table already records (or physically
-        carries) the legacy identity ``dt`` layout keeps writing it —
-        existing warehouses stay single-layout."""
-        if self._legacy_dt_layout(table):
-            self.append(
-                df.withColumn("dt", F.to_date("transaction_date")),
-                table, partition_by=["dt"])
-        else:
-            self.append(df, table,
-                        partition_by=["days(transaction_date)"])
-
-    def _legacy_dt_layout(self, table: str) -> bool:
-        """True when the table already lays out under the pre-round-13
-        identity ``dt`` spec (recorded, visible in its committed
-        relpaths, or — for untracked legacy directories — visible as
-        ``dt=`` subdirectories on disk) — new appends then conform to
-        it instead of opening a second layout in an existing
-        warehouse."""
-        if self.table_partition_by(table) == ["dt"]:
-            return True
-        try:
-            return any(e.startswith("dt=")
-                       for e in os.listdir(self._path(table)))
-        except OSError:
-            return False
+        transaction_date)`` — the engine derives the day path key itself
+        (Iceberg ``days()`` transform) instead of the caller
+        materializing a ``dt`` column, and ``read_transactions``'s
+        since/until band prunes the derived directories through the
+        base-column bounds."""
+        self.append(df, table, partition_by=["days(transaction_date)"])
 
     # -- fraud-mart convenience ----------------------------------------------
 
     def append_mart(self, df: DataFrame, table: str = "rep_fraud") -> None:
-        """Mart append, hive-partitioned by event day.
+        """Mart append, partitioned by event day (``days(event_dt)``).
 
         The mart grows with every day's hits; the rules' NOT-EXISTS
         dedup joins on ``event_dt`` EQUALITY, so a day's dedup only ever
         needs the mart rows whose event day falls in that day's rule
-        band. Partitioning by ``dt = date(event_dt)`` turns that into a
-        partition-pruned read (``read_mart(since, until)``) — the dedup
-        stays O(band), not O(all historical hits), at 100 TB.
-
-        LAYOUT NOTE: the mart became dt-partitioned in round 4. A
-        warehouse written by an older build holds an UNPARTITIONED
-        ``rep_fraud`` — appending here would mix root-level files with
-        ``dt=`` dirs, which Spark partition discovery rejects. Guarded:
-        a legacy layout raises with a one-shot migration recipe
-        (rewrite through ``migrate_mart_layout``) instead of silently
-        corrupting the table."""
-        path = self._path(table)
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            raise ValueError(
-                f"{table} has a legacy unpartitioned layout at {path}; "
-                "run Warehouse.migrate_mart_layout() once before appending"
-            )
-        if self._legacy_dt_layout(table):
-            self.append(df.withColumn("dt", F.to_date("event_dt")),
-                        table, partition_by=["dt"])
-        else:
-            # hidden partitioning (r12 item #3): days(event_dt) derives
-            # the day directory; read_mart's band prunes it via the
-            # event_dt bounds without a materialized dt column
-            self.append(df, table, partition_by=["days(event_dt)"])
-
-    def migrate_mart_layout(self, table: str = "rep_fraud") -> None:
-        """One-shot migration of a pre-round-4 UNPARTITIONED mart to the
-        dt-partitioned layout (tmp-write + rename swap, same atomicity
-        caveats as ``compact``). No-op if already partitioned/absent."""
-        p = self._path(table)
-        if not os.path.isdir(p) or not any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        ):
-            return
-        df = self.spark.read.parquet(p)
-        if "dt" not in df.columns:
-            df = df.withColumn("dt", F.to_date("event_dt"))
-        tmp = p + ".migrate"
-        df.write.mode("overwrite").partitionBy("dt").parquet(tmp)
-        trash = p + ".old"
-        os.rename(p, trash)
-        os.rename(tmp, p)
-        shutil.rmtree(trash, ignore_errors=True)
+        band. The day partition turns that into a pruned read
+        (``read_mart(since, until)``) — the dedup stays O(band), not
+        O(all historical hits), at 100 TB."""
+        self.append(df, table, partition_by=["days(event_dt)"])
 
     def read_mart(self, table: str = "rep_fraud",
                   since: "datetime.date | None" = None,
                   until: "datetime.date | None" = None) -> DataFrame:
-        """Mart read; `since`/`until` prune by day — through the
-        ``dt`` path key on the legacy identity layout, through the
-        ``days(event_dt)`` hidden layout via the base-column band
-        (same mechanics as ``read_transactions``)."""
+        """Mart read; `since`/`until` prune the ``days(event_dt)``
+        directories through the base-column band (same mechanics as
+        ``read_transactions``)."""
         from .. import schemas
 
         if not self.exists(table):
             return _empty_df(self.spark, schemas.REP_FRAUD)
         df = self.read(table, prune=_day_band_prune(
             "event_dt", since, until))
-        # band on the PARTITION column when the read surfaces one
-        # (legacy dt, or the hidden day key on undeclared reads) so
-        # Catalyst turns it into PartitionFilters; else the base column
-        band = (F.col("dt") if "dt" in df.columns
-                else F.col("event_dt_day") if "event_dt_day" in df.columns
+        # band on the hidden day key when the (undeclared) read
+        # surfaces it, so Catalyst turns it into PartitionFilters; else
+        # the base column
+        band = (F.col("event_dt_day") if "event_dt_day" in df.columns
                 else F.to_date("event_dt"))
         if since is not None:
             df = df.where(band >= F.lit(since))
@@ -5499,13 +5447,11 @@ class Warehouse:
                           since: "datetime.date | None" = None,
                           until: "datetime.date | None" = None,
                           prune: dict | None = None) -> DataFrame:
-        """Fact read; `since`/`until` prune to the matching day
-        directories — on the legacy identity layout through the ``dt``
-        path key (Catalyst PartitionFilters + manifest file skipping),
-        on the round-13 hidden ``days(transaction_date)`` layout
-        through the base-column band that ``_prune_physical`` expands
-        to the derived ``transaction_date_day`` path key. Either way
-        the read stays O(days requested), not O(history), at 100 TB.
+        """Fact read; `since`/`until` prune to the matching
+        ``days(transaction_date)`` directories through the base-column
+        band that ``_prune_physical`` expands to the derived
+        ``transaction_date_day`` path key, so the read stays O(days
+        requested), not O(history), at 100 TB.
 
         ``prune`` forwards extra bounds to ``read``'s manifest-stats
         file skipping (commit-log-tracked tables only; a no-op
@@ -5526,44 +5472,31 @@ class Warehouse:
             eff = {**(eff or {}), **prune}
         df = self.read(table, prune=eff)
         # partition column first (PartitionFilters at the scan), base
-        # column only when no layout column surfaces
-        band = (F.col("dt") if "dt" in df.columns
-                else F.col("transaction_date_day")
+        # column only when the layout column does not surface
+        band = (F.col("transaction_date_day")
                 if "transaction_date_day" in df.columns
                 else F.to_date("transaction_date"))
         if since is not None:
             df = df.where(band >= F.lit(since))
         if until is not None:
             df = df.where(band <= F.lit(until))
-        # layout columns are physical, not logical: the legacy dt key
-        # and the hidden day key (surfaced only on undeclared reads)
-        return df.drop("dt", "transaction_date_day")
+        # the hidden day key (surfaced only on undeclared reads) is
+        # physical layout, not a logical column
+        return df.drop("transaction_date_day")
 
 
 def _day_band_prune(ts_col: str, since, until) -> dict | None:
     """Manifest prune bounds for a day band over a timestamp column:
     the base-column bound (footer stats, plus ``_prune_physical``'s
-    expansion to the hidden ``days()`` path key) AND the legacy
-    identity ``dt`` path-key bound, so one prune dict covers both fact
-    layouts. Necessary by construction for the ``to_date(ts_col)``
-    band row filter the callers apply: the day band [since, until]
-    equals the timestamp band [since 00:00, until end-of-day] at
-    Spark's microsecond precision."""
+    expansion to the hidden ``days()`` path key). Necessary by
+    construction for the ``to_date(ts_col)`` band row filter the
+    callers apply: the day band [since, until] equals the timestamp
+    band [since 00:00, until end-of-day] at Spark's microsecond
+    precision."""
     if since is None and until is None:
         return None
     return {
         ts_col: (since.isoformat() if since is not None else None,
                  until.isoformat() + "T23:59:59.999999"
                  if until is not None else None),
-        "dt": (since.isoformat() if since is not None else None,
-               until.isoformat() if until is not None else None),
     }
-
-
-def _versions(path: str) -> list[int]:
-    out = []
-    for entry in os.listdir(path):
-        m = re.fullmatch(r"v=(\d+)", entry)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)

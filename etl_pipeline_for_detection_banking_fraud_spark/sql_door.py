@@ -661,16 +661,7 @@ def warehouse_sql(wh: Warehouse, stmt: str):
             ])
         part_by = wh.table_partition_by(table) or None
         if plan.overwrite():
-            t = wh.begin()
-            try:
-                t.replace = True
-                t.base_seq = wh._latest_seq()
-                t.append(df, table, partition_by=part_by)
-                t.commit()
-            except BaseException:
-                if not t._done:
-                    t.abort()
-                raise
+            wh.rewrite(df, table, partition_by=part_by)
             return None
         with wh.transaction():
             wh.append(df, table, partition_by=part_by)

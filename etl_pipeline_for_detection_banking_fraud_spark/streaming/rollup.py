@@ -115,11 +115,11 @@ def _commit_rollup(wh: Warehouse, rollup_table: str, combined: DataFrame,
     meta = local_rows_df(
         wh.spark, [(int(batch_id), stream_id)],
         "batch_id long, stream_id string")
+    tables = {rollup_table: combined, f"{rollup_table}__meta": meta,
+              **(extra_tables or {})}
     txn = Transaction(wh)
-    txn.replace = True
-    txn.append(combined, rollup_table)
-    txn.append(meta, f"{rollup_table}__meta")
-    for name, df in (extra_tables or {}).items():
+    txn.replaced = {name.lower() for name in tables}
+    for name, df in tables.items():
         txn.append(df, name)
     txn.commit()
 

@@ -51,7 +51,7 @@ def _count_replace_commits(monkeypatch, inject=None):
     orig = Transaction.commit
 
     def wrapped(self):
-        if self.replace:
+        if self.replaced:
             calls["replace"] += 1
             if inject is not None and not calls["injected"]:
                 calls["injected"] = True
@@ -207,7 +207,7 @@ def test_absorption_does_not_swallow_concurrent_replace(
     raises = {"n": 0}
 
     def wrapped(self):
-        if self.replace and self.absorb_appends and not raced["done"]:
+        if self.replaced and self.absorb_appends and not raced["done"]:
             raced["done"] = True
             racer.delete_where("ev", "id = 0", mode="rewrite")
         try:
@@ -240,7 +240,7 @@ def test_concurrent_drop_conflicts_with_replace(tmp_path):
 
     rewriter = Warehouse(None, root, checkpoint_interval=0)
     txn = Transaction(rewriter)
-    txn.replace = True
+    txn.replaced = {"tbl"}
     txn.base_seq = 1
     txn.absorb_appends = {"tbl"}
     txn.pending = {"tbl": ["compacted.parquet"]}

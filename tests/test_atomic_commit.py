@@ -203,6 +203,109 @@ def test_batch_day_crash_and_rerun_no_duplicates(spark, feeds, tmp_path, monkeyp
     assert mart.count() > 0
 
 
+HIST_COLS = ["terminal_id", "terminal_type", "terminal_city",
+             "terminal_address", "effective_from", "effective_to",
+             "deleted_flg"]
+
+
+def _rows(df) -> list[tuple]:
+    """A frame's rows as a sorted multiset (``repr`` orders NULLs too)."""
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _oracle_hists(feeds, n_days: int) -> list[list[tuple]]:
+    """The DuckDB oracle's SCD2 dimension after each of the first
+    ``n_days`` days of ``feeds``, as sorted row tuples."""
+    import pandas as pd
+
+    from . import ref_oracle
+    from .conftest import TERM_COLS
+
+    con = ref_oracle.make_oracle()
+    dims = feeds.world.dims_pandas()
+    ref_oracle.load_dims(con, dims["cards"], dims["accounts"], dims["clients"])
+    out = []
+    for feed in feeds.days[:n_days]:
+        ref_oracle.run_day(
+            con, feed.tx,
+            pd.DataFrame(feed.blacklist, columns=["dt", "passport"]),
+            pd.DataFrame(feed.terminals, columns=TERM_COLS), feed.date)
+        out.append(sorted(con.sql(
+            f"SELECT {', '.join(HIST_COLS)} FROM hist").fetchall(), key=repr))
+    return out
+
+
+def test_batch_day_crash_keeps_dimension_with_its_day(spark, feeds, tmp_path,
+                                                      monkeypatch):
+    """The SCD2 dimension commits with its day: kill day 2's one commit
+    and every table — the dimension included — reads exactly as after
+    day 1; the re-run of day 2 lands the oracle's day-2 dimension."""
+    dims = load_seed_dims(spark, feeds.seed_dml)
+    root = str(tmp_path / "wh")
+    hist1, hist2 = _oracle_hists(feeds, 2)
+    DailyBatch(spark, root, dims, atomic=True).run_day(*feeds.paths(0))
+
+    def state(wh):
+        return {
+            "hist": _rows(wh.read("dwh_dim_terminals_hist").select(*HIST_COLS)),
+            "tx": _rows(wh.read_transactions()),
+            "bl": _rows(wh.read("dwh_fact_passport_blacklist")),
+            "mart": _rows(wh.read_mart()),
+            "meta": _rows(wh.read("meta_loading")),
+        }
+
+    after_day1 = state(Warehouse(spark, root))
+    assert after_day1["hist"] == hist1
+
+    real_commit = Transaction.commit
+
+    def crashing_commit(self):
+        self._finish()
+        raise RuntimeError("simulated kill before manifest link")
+
+    monkeypatch.setattr(Transaction, "commit", crashing_commit)
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        DailyBatch(spark, root, dims, atomic=True).run_day(*feeds.paths(1))
+    monkeypatch.setattr(Transaction, "commit", real_commit)
+
+    assert state(Warehouse(spark, root)) == after_day1
+
+    DailyBatch(spark, root, dims, atomic=True).run_day(*feeds.paths(1))
+    wh = Warehouse(spark, root)
+    assert _rows(wh.read("dwh_dim_terminals_hist").select(*HIST_COLS)) == hist2
+    assert wh.read_transactions().count() == \
+        len(feeds.days[0].tx) + len(feeds.days[1].tx)
+
+
+def test_replace_and_append_in_one_entry(spark, tmp_path):
+    """One transaction replaces table ``a`` and appends to table ``b``:
+    inside it a read of ``a`` sees only the new rows; after the commit a
+    fresh reader sees both, and the log holds one entry."""
+    root = str(tmp_path / "wh")
+    wh = Warehouse(spark, root)
+    with wh.transaction():
+        wh.append(spark.createDataFrame([(1,), (2,)], "id long"), "a")
+        wh.append(spark.createDataFrame([(10,)], "id long"), "b")
+    base = len(wh.snapshots())
+
+    with wh.transaction():
+        wh.rewrite(spark.createDataFrame([(3,)], "id long"), "a")
+        wh.append(spark.createDataFrame([(11,)], "id long"), "b")
+        assert _rows(wh.read("a")) == [(3,)]
+        assert _rows(wh.read("b")) == [(10,), (11,)]
+        assert Warehouse(spark, root).read("a").count() == 2  # not yet
+
+    fresh = Warehouse(spark, root)
+    assert _rows(fresh.read("a")) == [(3,)]
+    assert _rows(fresh.read("b")) == [(10,), (11,)]
+    snaps = fresh.snapshots()
+    assert len(snaps) == base + 1
+    assert snaps[-1]["op"] == "replace"
+    assert fresh._load_entry(snaps[-1]["seq"])["append_tables"] == ["b"]
+    # the replaced rows stay readable by time travel
+    assert _rows(fresh.read_at("a", snaps[-2]["seq"])) == [(1,), (2,)]
+
+
 def test_batch_atomic_matches_legacy_replay(spark, feeds, tmp_path):
     """The atomic day produces byte-identical LOGICAL state to the
     legacy day: same fact rows, same mart rows."""
@@ -330,8 +433,14 @@ def test_incremental_atomic_matches_incremental_legacy(spark, feeds, tmp_path):
     lm, am = legacy.wh.read_mart(), atomic.wh.read_mart()
     assert lm.count() == am.count()
     assert lm.exceptAll(am).count() == 0 and am.exceptAll(lm).count() == 0
-    # one commit per day (plus none extra): the day really is one txn
-    assert [s["op"] for s in atomic.wh.snapshots()] == ["add"] * 3
+    # one commit per day (plus none extra): the day really is one txn,
+    # replacing the SCD2 dimension and appending to every other table
+    snaps = atomic.wh.snapshots()
+    assert [s["op"] for s in snaps] == ["replace"] * 3
+    for s in snaps:
+        entry = atomic.wh._load_entry(s["seq"])
+        assert set(entry["tables"]) - set(entry["append_tables"]) == {
+            "dwh_dim_terminals_hist"}
 
 
 def test_replace_conflicting_with_append_raises(spark, tmp_path):
@@ -349,7 +458,7 @@ def test_replace_conflicting_with_append_raises(spark, tmp_path):
     # open a replace against the current snapshot (seq 1)...
     writer = Warehouse(spark, root)
     txn = Transaction(writer)
-    txn.replace = True
+    txn.replaced = {"dwh_fact_transactions"}
     txn.base_seq = 1
     txn.append(writer.read_transactions().withColumn(
         "dt", __import__("pyspark").sql.functions.to_date("transaction_date")
@@ -379,7 +488,7 @@ def test_replace_to_other_table_does_not_conflict(spark, tmp_path):
 
     writer = Warehouse(spark, root)
     txn = Transaction(writer)
-    txn.replace = True
+    txn.replaced = {"dwh_fact_transactions"}
     txn.base_seq = 1
     txn.append(writer.read_transactions().withColumn(
         "dt", __import__("pyspark").sql.functions.to_date("transaction_date")
@@ -415,7 +524,7 @@ def test_compact_retries_through_conflict(spark, tmp_path, monkeypatch):
 
     def racing_commit(self):
         # inject a concurrent append just before the FIRST replace publish
-        if self.replace and not raced["done"]:
+        if self.replaced and not raced["done"]:
             raced["done"] = True
             with racer.transaction():
                 racer.append_transactions(_tx_rows(spark, 5, prefix="race"))

@@ -197,7 +197,7 @@ class TestCheckpointEndToEnd:
 
         # stale replace: base_seq=2, but seqs 3 and 4 touched the table
         txn = Transaction(wh)
-        txn.replace = True
+        txn.replaced = {"dwh_fact_transactions"}
         txn.base_seq = 2
         txn.append(_tx_rows(spark, 1), "dwh_fact_transactions")
         with pytest.raises(CommitConflict):
@@ -374,7 +374,7 @@ class TestPruneEmptyFallback:
         with wh.transaction():
             wh.append(spark.createDataFrame([(1,)], "id int").coalesce(1), "ev")
         txn = Transaction(wh)
-        txn.replace = True
+        txn.replaced = {"ev"}
         txn.base_seq = wh._latest_seq()
         txn.pending["ev"] = []  # replace with nothing (e.g. full purge)
         txn.commit()
@@ -455,14 +455,14 @@ class TestExpireLog:
         wh = Warehouse(None, root, checkpoint_interval=0)
         wh.expire_log(keep_entries=10)  # horizon 40
         txn = Transaction(wh)
-        txn.replace = True
+        txn.replaced = {"events"}
         txn.base_seq = 20  # below horizon: unverifiable conflict window
         txn.pending = {"events": ["x.parquet"]}
         with pytest.raises(CommitConflict, match="expire horizon"):
             txn.commit()
         # a fresh base at/after the horizon commits fine
         txn2 = Transaction(wh)
-        txn2.replace = True
+        txn2.replaced = {"events"}
         txn2.base_seq = wh._latest_seq()
         txn2.pending = {"events": ["y.parquet"]}
         txn2.commit()

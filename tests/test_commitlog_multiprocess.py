@@ -62,7 +62,7 @@ def _replace_worker(root: str, barrier, errors, conflicts) -> None:
             base = wh._latest_seq()
             files = wh._manifest_files("tbl") or []
             txn = Transaction(wh)
-            txn.replace = True
+            txn.replaced = {"tbl"}
             txn.base_seq = base
             txn.pending = {"tbl": list(files)}
             try:
@@ -229,7 +229,7 @@ def _absorbing_rewrite_worker(root: str, barrier, errors,
             base = wh._latest_seq()
             files = wh._manifest_files("tbl") or []
             txn = Transaction(wh)
-            txn.replace = True
+            txn.replaced = {"tbl"}
             txn.base_seq = base
             txn.absorb_appends = {"tbl"}
             txn.pending = {"tbl": list(files)}

@@ -127,50 +127,6 @@ def test_partition_scoped_compact(spark, tmp_path):
     assert sorted(map(tuple, wh.read_mart().collect())) == rows_before
 
 
-def test_legacy_mart_layout_guard_and_migration(spark, tmp_path):
-    """A pre-round-4 warehouse holds an UNPARTITIONED rep_fraud; blindly
-    appending dt= dirs next to root-level parquet files produces a mixed
-    layout Spark partition discovery rejects. append_mart must refuse,
-    and migrate_mart_layout must convert in place with identical rows."""
-    import pytest
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    mart_dir = str(tmp_path / "wh" / "rep_fraud")
-    legacy = spark.createDataFrame(
-        [
-            (datetime.datetime(2021, 3, 1, 10, 0), "11 11 111111", "A B C",
-             "+7-1", "blacklisted_passport", datetime.date(2021, 3, 1)),
-            (datetime.datetime(2021, 3, 2, 11, 0), "22 22 222222", "D E F",
-             "+7-2", "expired_contract", datetime.date(2021, 3, 2)),
-        ],
-        schema=schemas.REP_FRAUD,
-    )
-    legacy.write.mode("overwrite").parquet(mart_dir)  # legacy flat layout
-
-    new_day = spark.createDataFrame(
-        [
-            (datetime.datetime(2021, 3, 3, 12, 0), "33 33 333333", "G H I",
-             "+7-3", "different_cities", datetime.date(2021, 3, 3)),
-        ],
-        schema=schemas.REP_FRAUD,
-    )
-    with pytest.raises(ValueError, match="legacy unpartitioned layout"):
-        wh.append_mart(new_day)
-
-    wh.migrate_mart_layout()
-    assert glob.glob(os.path.join(mart_dir, "dt=*"))  # now partitioned
-    assert not any(
-        f.endswith(".parquet") for f in os.listdir(mart_dir)
-    )  # no root-level data files left
-    assert wh.read_mart().count() == 2
-
-    wh.append_mart(new_day)  # appends cleanly post-migration
-    assert wh.read_mart().count() == 3
-    assert wh.read_mart(
-        since=datetime.date(2021, 3, 3), until=datetime.date(2021, 3, 3)
-    ).count() == 1
-
-
 def test_rewrites_honor_recorded_partition_spec(spark, tmp_path):
     """Maintenance rewrites derive the layout from recorded table
     metadata (commit entries carry partition_by), not a hard-coded

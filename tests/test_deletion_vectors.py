@@ -559,7 +559,7 @@ class TestDvConcurrentVacuum:
 
         live = a._dv_split_read(_build, "t", {}, mf, keep_file_col="_src")
         txn = Transaction(a)
-        txn.replace = True
+        txn.replaced = {"t"}
         txn.base_seq = a._latest_seq()
         txn.pending["t"] = list(mf)
         dv_rel = a._write_dv_file("t", live.where("k = 1"), txn)

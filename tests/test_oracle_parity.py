@@ -90,12 +90,6 @@ def test_query_matches_oracle(qdef, spark, duck, sf01):
         raise AssertionError(f"{qdef.name}: value mismatch\nspark-only={diff_a}\nduck-only={diff_b}")
 
 
-@pytest.mark.parametrize("qdef", [q for q in CATALOG if q.sql is None], ids=lambda q: q.name)
-def test_rows_only_queries_run(qdef, spark, sf01):
-    df = qdef.spark(spark, sf01)
-    assert df.count() >= 0
-
-
 def test_approx_stats_within_published_bounds(spark, duck, sf01):
     """`approx_stats` is retired from the catalog (sketch values are
     implementation-defined, so it could never carry an exact oracle —

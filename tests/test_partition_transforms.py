@@ -213,33 +213,3 @@ class TestPipelineSinkMigration:
             "transaction_date_day=2021-03-02" in f
             for f in band.inputFiles())
         assert "transaction_date_day" not in band.columns
-
-    def test_legacy_dt_warehouse_keeps_identity_layout(self, spark,
-                                                       tmp_path):
-        """A warehouse whose fact table already lays out under the
-        identity dt spec keeps writing it — no second layout opens in
-        an existing warehouse."""
-        from decimal import Decimal
-
-        from pyspark.sql import functions as F
-
-        from etl_pipeline_for_detection_banking_fraud_spark import schemas
-        wh = _wh(spark, tmp_path)
-
-        def tx(i, d):
-            return (f"t{i}", datetime.datetime(2021, 3, d, 9, 0),
-                    Decimal("1.00"), "C", "PAYMENT", "SUCCESS", "T")
-
-        legacy = spark.createDataFrame([tx(0, 1)],
-                                       schema=schemas.TRANSACTIONS)
-        with wh.transaction() as t:  # simulate the pre-r13 layout
-            t.append(legacy.withColumn("dt", F.to_date("transaction_date")),
-                     "dwh_fact_transactions", partition_by=["dt"])
-        with wh.transaction():
-            wh.append_transactions(spark.createDataFrame(
-                [tx(1, 2)], schema=schemas.TRANSACTIONS))
-        dirs = {r.split("/")[0] for r in
-                wh._manifest_files("dwh_fact_transactions")}
-        assert dirs == {"dt=2021-03-01", "dt=2021-03-02"}
-        band = wh.read_transactions(since=datetime.date(2021, 3, 2))
-        assert band.count() == 1 and "dt" not in band.columns

@@ -83,6 +83,14 @@ def test_no_pushdown_serialization_trap(spark, sf01, qname):
     assert "split(" not in first_scan_line
 
 
+def test_every_catalog_entry_has_oracle_sql():
+    """tests/test_oracle_parity.py checks each catalog entry against
+    DuckDB through its oracle SQL: an entry without one would run
+    unchecked."""
+    missing = [q.name for q in CATALOG if not q.sql]
+    assert not missing, f"catalog entries without oracle SQL: {missing}"
+
+
 def test_report_rotation_lists_name_real_entries():
     """The evidence-policy ordering lists must reference only existing
     catalog entries (a typo would silently drop the rotation pin)."""

@@ -40,7 +40,7 @@ from .test_write_jobs import _jobs
 # fixture's second day, as measured: the retro-range probe, the busiest
 # card's top-1 count, the broadcasts, the one union's write, its grouped
 # count and the audit flush.
-RULES_JOB_BUDGET = 22
+RULES_JOB_BUDGET = 21
 HOT_NODE = "FlatMapGroupsInPandas"
 
 

@@ -521,7 +521,7 @@ class TestConcurrentSchemaCommits:
             # merge's base snapshot and its commit — exactly once, and
             # only for the merge's replace transaction (the injected
             # add_columns commits through this hook too)
-            if txn.replace and not fired["done"]:
+            if txn.replaced and not fired["done"]:
                 fired["done"] = True
                 other.add_columns("tx", {"extra": "int"})
             return real_commit(txn)
